@@ -324,22 +324,12 @@ object DataGen {
         col("performed_by"))
   }
 
-  /** Audit log row per generated table (G10; ref 01:42-72). */
-  def loadLog(spark: SparkSession, table: String, n: Long): DataFrame = {
-    import spark.implicits._
-    Seq((s"datagen_$table", table, n, "success"))
-      .toDF("process_name", "table_name", "records_inserted", "status")
-      .withColumn("start_time", current_timestamp())
-      .withColumn("end_time", current_timestamp())
-      .withColumn("error_message", lit(null).cast("string"))
-  }
-
-  /** Generate and write every table as parquet, appending one audit row
+  /** Generate and write every table as parquet, logging one audit row
     * per table to `load_logs` (S4 batch-insert sink + G10 audit,
     * ref 01_data_generation.py:42-72 — Spark's task-parallel write IS
-    * the chunked executemany). */
+    * the chunked executemany). Returns the rows written per table. */
   def writeAll(spark: SparkSession, cfg: Config, dir: String): Map[String, Long] = {
-    all(spark, cfg).map { case (name, df) =>
+    def layOut(name: String, df: DataFrame): Unit = {
       // deliveries is the incremental-extract table: date-partitioned at
       // rest (ref 03_optimization_indexes.sql:23-24 — the daily-batch
       // partial index; Spark's analog is directory layout + in-file
@@ -370,9 +360,11 @@ object DataGen {
         // the guide's 128 MB–1 GB per-file target.
         df.coalesce(1).write.mode("overwrite").parquet(s"$dir/$name")
       }
-      val n = spark.read.parquet(s"$dir/$name").count()
-      loadLog(spark, name, n).write.mode("append").parquet(s"$dir/load_logs")
-      name -> n
+    }
+    LoadLog.batch(spark, dir, t => s"datagen_$t") { log =>
+      all(spark, cfg).map { case (name, df) =>
+        name -> log.step(name)(graft.sources.Lake.writeCounted(df)(layOut(name, _)))
+      }
     }
   }
 

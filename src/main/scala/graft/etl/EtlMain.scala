@@ -83,11 +83,12 @@ object EtlMain {
     val warehouse = opts.getOrElse("warehouse",
       sys.error("--warehouse <dir> is required"))
 
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").filter(_.nonEmpty)
+      .getOrElse(Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
+      .master(s"local[$cpus]")
       .appName("graft-etl")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
@@ -118,7 +119,15 @@ object EtlMain {
       Pipeline.nthLastDateWithData(t, nth)
     }.getOrElse(sys.error("no day with delivered data found"))
 
-    val out = runOnce(spark, t, warehouse, targetDate)
+    val batch = runOnce(spark, t, warehouse, targetDate)
+    // the batch's lineage reads the dims its load replaced: everything
+    // after the load reads the loaded tables back from the warehouse
+    import org.apache.spark.sql.functions._
+    val out = batch.copy(
+      fact = spark.read.parquet(s"$warehouse/fact_deliveries")
+        .filter(col("p_date_key") === targetDate.replace("-", "").toInt)
+        .drop("p_date_key"),
+      dims = batch.dims.map { case (k, _) => k -> spark.read.parquet(s"$warehouse/$k") })
     Pipeline.registerSecureViews(out)
     // the reference's extract-time outlier scan (etl_pipeline.py:271-276)
     val outliers = Quality.outlierScan(out.fact,

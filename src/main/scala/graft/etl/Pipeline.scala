@@ -1,7 +1,10 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
+
+import graft.sources.Lake
 
 /** Daily incremental ETL orchestration (reference
   * etl_pipeline.py:1170-1280 `run_etl` + `main` :1285-1313):
@@ -17,12 +20,17 @@ import org.apache.spark.sql.functions._
   */
 object Pipeline {
 
+  /** One batch's outputs. `shared` holds the intermediates that several
+    * outputs read (the extract, dim_route, dim_customer, the SCD2
+    * vehicle/driver dims and the pre-resolve fact), inputs before their
+    * consumers, so `load` can compute each of them once. */
   final case class EtlOutput(
       targetDate: String,
       dims: Map[String, DataFrame],
       fact: DataFrame,
       reports: Map[String, DataFrame],
-      stagingAudit: DataFrame)
+      stagingAudit: DataFrame,
+      shared: Seq[DataFrame])
 
   /** nth-last date with delivered data (ref get_nth_last_date_with_data,
     * etl_pipeline.py:140-165): n=0 → most recent. */
@@ -97,7 +105,8 @@ object Pipeline {
       Map(
         "report_driver_totals" -> Reports.driverTotals(fact),
         "report_route_totals" -> Reports.routeTotals(fact)),
-      stagingAudit)
+      stagingAudit,
+      Seq(extract, dimRoute, dimCustomer, dimVehicle, dimDriver, fact))
   }
 
   /** Role-filtered secure views (ref scripts/04_dimensional_model.sql:
@@ -122,62 +131,59 @@ object Pipeline {
   /** Warehouse load: dims overwritten as snapshots (SCD2 dims carry
     * their own history), fact appended date-partitioned, dim_date
     * anti-join-insert (S7, ref load_dim_date_if_not_exists :978-1024).
-    * Every write appends a `load_logs` audit row (G10, ref
-    * 01_data_generation.py:42-72), and dims are additionally kept under
-    * `snapshots/<batch date>/` — the parquet-lake analog of the DW's
-    * 30-day Time Travel retention (ref 04:162-168, SURVEY X13). */
+    * Each table's write is one step of the batch's `load_logs` (G10,
+    * ref 01_data_generation.py:42-72), its row count observed by the
+    * write itself. Dims are written once, to `snapshots/<batch date>/`
+    * — the parquet-lake analog of the DW's 30-day Time Travel retention
+    * (ref 04:162-168, SURVEY X13) — and published to the live path as
+    * a copy of those files.
+    *
+    * The batch's shared intermediates are persisted for the duration of
+    * the load (in dependency order, so each cached plan reads the
+    * caches below it) and released however it ends. */
   def load(out: EtlOutput, warehouseDir: String): Unit = {
     val spark = out.fact.sparkSession
-    val t0 = new java.sql.Timestamp(System.currentTimeMillis())
-    def audit(table: String, n: Long): Unit = {
-      import spark.implicits._
-      Seq((s"etl_${out.targetDate}", table, n, t0,
-        new java.sql.Timestamp(System.currentTimeMillis()), "success",
-        null: String))
-        .toDF("process_name", "table_name", "records_inserted",
-          "start_time", "end_time", "status", "error_message")
-        .write.mode("append").parquet(s"$warehouseDir/load_logs")
-    }
-    // ORDER MATTERS in the incremental flow: the fact's PIT lineage and
-    // the SCD2 dims all READ the warehouse dim directories that this
-    // load replaces. Everything downstream of those files (fact,
-    // reports, staging) is materialized FIRST; each dim is then
-    // materialized once into its batch snapshot (inputs still intact)
-    // and the live path swapped from the snapshot's files — no lineage
-    // ever reads a directory after it has been replaced.
-    val fact = out.fact.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      fact
-        .withColumn("p_date_key", col("date_key"))
-        .write.mode("append").partitionBy("p_date_key")
-        .parquet(s"$warehouseDir/fact_deliveries")
-      audit("fact_deliveries", fact.count())
+    val owned = out.shared.filter(_.storageLevel == StorageLevel.NONE)
+    owned.foreach(_.persist(StorageLevel.MEMORY_AND_DISK))
+    try LoadLog.batch(spark, warehouseDir, _ => s"etl_${out.targetDate}") { log =>
+      def write(table: String, df: DataFrame)(w: DataFrame => Unit): Unit =
+        log.step(table)(Lake.writeCounted(df)(w))
+      // ORDER MATTERS in the incremental flow: the fact's PIT lineage
+      // and the SCD2 dims all READ the warehouse dim directories this
+      // load replaces. Fact, reports and staging are written FIRST; each
+      // dim is then written once into its batch snapshot (inputs still
+      // intact) and the live path swapped in from the snapshot's files —
+      // no write ever reads a directory after it has been replaced, and
+      // a cache block evicted after a swap never feeds a write.
+      write("fact_deliveries", out.fact)(
+        _.withColumn("p_date_key", col("date_key"))
+          .write.mode("append").partitionBy("p_date_key")
+          .parquet(s"$warehouseDir/fact_deliveries"))
       out.reports.foreach { case (name, df) =>
-        graft.sources.Lake.atomicOverwrite(df, s"$warehouseDir/$name")
-        audit(name, df.count())
+        write(name, df)(Lake.atomicOverwrite(_, s"$warehouseDir/$name"))
       }
-      out.stagingAudit.write.mode("append").parquet(s"$warehouseDir/staging_daily_load")
-      audit("staging_daily_load", out.stagingAudit.count())
+      write("staging_daily_load", out.stagingAudit)(
+        _.write.mode("append").parquet(s"$warehouseDir/staging_daily_load"))
 
-      out.dims.foreach { case (name, df) =>
-        if (name == "dim_date") {
+      out.dims.foreach {
+        case (name @ "dim_date", df) =>
           val path = s"$warehouseDir/$name"
-          val existing = try {
-            Some(spark.read.parquet(path))
-          } catch { case _: Throwable => None }
-          val toInsert = existing match {
-            case Some(e) => df.join(e.select("date_key"), Seq("date_key"), "left_anti")
-            case None => df
-          }
-          toInsert.write.mode("append").parquet(path)
-        } else {
+          val toInsert =
+            if (Quality.missingTables(spark, warehouseDir, Seq(name)).nonEmpty) df
+            else df.join(spark.read.parquet(path).select("date_key"), Seq("date_key"),
+              "left_anti")
+          write(name, toInsert)(_.write.mode("append").parquet(path))
+        case (name, df) =>
           val snap = s"$warehouseDir/snapshots/${out.targetDate}/$name"
-          df.write.mode("overwrite").parquet(snap)
-          graft.sources.Lake.atomicOverwrite(
-            spark.read.parquet(snap), s"$warehouseDir/$name")
-        }
-        audit(name, spark.read.parquet(s"$warehouseDir/$name").count())
+          log.step(name) {
+            // a cached dim keeps one partition per shuffle partition;
+            // rebalance lets AQE size the snapshot's files by its bytes
+            val n = Lake.writeCounted(df)(
+              _.hint("rebalance").write.mode("overwrite").parquet(snap))
+            Lake.publishCopy(spark, snap, s"$warehouseDir/$name")
+            n
+          }
       }
-    } finally fact.unpersist()
+    } finally owned.foreach(_.unpersist())
   }
 }

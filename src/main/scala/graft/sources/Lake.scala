@@ -1,6 +1,10 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
+import org.apache.hadoop.fs.{FileUtil, Path}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Storage-layout management for the parquet lake (SURVEY §4 X1/X2/X8:
@@ -30,18 +34,51 @@ object Lake {
       .sortWithinPartitions(sortCols.map(col): _*)
       .write.mode(mode).parquet(dir)
 
-  /** Crash-safe directory swap: stage the new content, move the old
-    * aside, move the new in, drop the backup — at every step either the
-    * old or new content exists under a recoverable name, and a plan
-    * that READS the target path can safely "overwrite" it (a direct
-    * overwrite of an input path is rejected by Spark / loses data). */
-  def atomicOverwrite(df: DataFrame, dir: String): Unit = {
-    val spark = df.sparkSession
-    val path = new org.apache.hadoop.fs.Path(dir)
+  /** Write `df` through `write` and return the rows written, counted
+    * by the write job itself (an observed `count(1)`) instead of a
+    * second action that re-reads the output or recomputes its lineage.
+    * `write` receives the observed frame and may add layout operators
+    * (repartition, sort, partitionBy) on top of it. */
+  def writeCounted(df: DataFrame)(write: DataFrame => Unit): Long = {
+    val rows = Observation()
+    write(df.observe(rows, count(lit(1)).as("rows")))
+    // the metrics arrive on the listener bus shortly after the job;
+    // bounded so a lost event fails the write instead of hanging it
+    Await.result(rows.future, 2.minutes).getLong(0)
+  }
+
+  /** Crash-safe replace of `dir` by the output of `df`: see [[swapIn]].
+    * A plan that READS `dir` can safely "overwrite" it this way (a
+    * direct overwrite of an input path is rejected by Spark / loses
+    * data). */
+  def atomicOverwrite(df: DataFrame, dir: String): Unit =
+    swapIn(df.sparkSession, dir)(tmp => df.write.mode("overwrite").parquet(tmp.toString))
+
+  /** Replace `dir` by a file copy of the directory `src` (through the
+    * same swap as [[atomicOverwrite]]). Runs no Spark job, so the
+    * published content is exactly the files of `src`, never a
+    * recomputation of whatever lineage produced them. */
+  def publishCopy(spark: SparkSession, src: String, dir: String): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val from = new Path(src)
+    swapIn(spark, dir) { tmp =>
+      if (!FileUtil.copy(from.getFileSystem(conf), from, tmp.getFileSystem(conf), tmp,
+          false, conf))
+        sys.error(s"failed to copy $src to $tmp")
+    }
+  }
+
+  /** Crash-safe directory swap: stage the new content at `<dir>__tmp`
+    * (replacing any stale one a crashed run left), move the old aside,
+    * move the new in, drop the backup — at every step either the old or
+    * new content exists under a recoverable name. */
+  private def swapIn(spark: SparkSession, dir: String)(stage: Path => Unit): Unit = {
+    val path = new Path(dir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(dir + "__tmp")
-    val bak = new org.apache.hadoop.fs.Path(dir + "__bak")
-    df.write.mode("overwrite").parquet(tmp.toString)
+    val tmp = new Path(dir + "__tmp")
+    val bak = new Path(dir + "__bak")
+    if (fs.exists(tmp)) fs.delete(tmp, true)
+    stage(tmp)
     if (fs.exists(bak)) fs.delete(bak, true)
     if (fs.exists(path) && !fs.rename(path, bak))
       sys.error(s"failed to stage backup of $dir")
@@ -72,7 +109,7 @@ object Lake {
   def compact(spark: SparkSession, dir: String,
       targetFileBytes: Long = 128L << 20,
       sortCols: Seq[String] = Nil): Unit = {
-    val path = new org.apache.hadoop.fs.Path(dir)
+    val path = new Path(dir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val partitioned = fs.listStatus(path).exists(st =>
       st.isDirectory && st.getPath.getName.contains("="))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.CorpusGen
-import graft.etl.DataGen
+import graft.etl.{DataGen, LoadLog}
 import graft.operators.FleetOps
 
 /** Permanent adversarial boundary fixture (r12 verdict Next #6).
@@ -488,17 +488,19 @@ object AdversarialGen {
     // fixture claims byte-stability (modulo the log's timestamps)
     org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
       .delete(new org.apache.hadoop.fs.Path(s"$dir/load_logs"), true): Unit
-    withPlants.foreach { case (name, df) =>
-      if (name == "deliveries") {
-        val parted = df
-          .withColumn("p_month",
-            trunc(col("delivered_datetime").cast("date"), "month"))
-          .repartition(col("p_month"))
-          .sortWithinPartitions(col("p_month"), col("delivered_datetime"))
-        graft.sources.Lake.writePartitioned(parted, s"$dir/$name", Seq("p_month"))
-      } else df.write.mode("overwrite").parquet(s"$dir/$name")
-      val n = spark.read.parquet(s"$dir/$name").count()
-      DataGen.loadLog(spark, name, n).write.mode("append").parquet(s"$dir/load_logs")
+    LoadLog.batch(spark, dir, t => s"datagen_$t") { log =>
+      withPlants.foreach { case (name, df) =>
+        log.step(name)(graft.sources.Lake.writeCounted(df) { df =>
+          if (name == "deliveries") {
+            val parted = df
+              .withColumn("p_month",
+                trunc(col("delivered_datetime").cast("date"), "month"))
+              .repartition(col("p_month"))
+              .sortWithinPartitions(col("p_month"), col("delivered_datetime"))
+            graft.sources.Lake.writePartitioned(parted, s"$dir/$name", Seq("p_month"))
+          } else df.write.mode("overwrite").parquet(s"$dir/$name")
+        })
+      }
     }
     new java.io.File(dir, "_OLTP_READY").createNewFile(): Unit
   }

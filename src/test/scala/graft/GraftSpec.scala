@@ -1,6 +1,10 @@
 package graft
 
+import scala.collection.mutable
+
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
+import org.scalatest.Outcome
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM-wide session —
@@ -8,6 +12,23 @@ import org.scalatest.funsuite.AnyFunSuite
 trait GraftSpec extends AnyFunSuite {
   lazy val spark: SparkSession = GraftSpec.session
   def sf(s: String): String = s"/root/testdata/$s"
+
+  private val tempDirs = mutable.ArrayBuffer.empty[java.nio.file.Path]
+
+  /** A fresh temporary directory, deleted with everything under it when
+    * the current test ends, however it ends. */
+  def tempDir(prefix: String): String = tempDirs.synchronized {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    tempDirs += dir
+    dir.toString
+  }
+
+  override def withFixture(test: NoArgTest): Outcome =
+    try super.withFixture(test)
+    finally tempDirs.synchronized {
+      tempDirs.foreach(d => FileUtils.deleteDirectory(d.toFile))
+      tempDirs.clear()
+    }
 }
 
 object GraftSpec {

@@ -78,7 +78,7 @@ class DataGenSpec extends GraftSpec {
   }
 
   test("writeAll persists every table with an audit row each (S4/G10)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_gen").toString
+    val dir = tempDir("graft_gen")
     val small = DataGen.Config(nTrips = 300, nMaintenance = 30)
     val counts = DataGen.writeAll(spark, small, dir)
     assert(counts.keySet === Set("vehicles", "drivers", "routes", "trips",
@@ -94,7 +94,7 @@ class DataGenSpec extends GraftSpec {
     // the optimization pin: the generator's spark.range parallelism must
     // never leak into the at-rest layout again (32 ~100 KB files per
     // 4 MB table = ~32 scan tasks per query over the fixture)
-    val dir = java.nio.file.Files.createTempDirectory("graft_gen_layout").toString
+    val dir = tempDir("graft_gen_layout")
     val small = DataGen.Config(nTrips = 300, nMaintenance = 30)
     DataGen.writeAll(spark, small, dir)
     for (t <- Seq("vehicles", "drivers", "routes", "trips", "maintenance")) {

@@ -1,6 +1,7 @@
 package graft.etl
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.GraftSpec
 
 class PipelineSpec extends GraftSpec {
@@ -61,7 +62,7 @@ class PipelineSpec extends GraftSpec {
   }
 
   test("incremental flow: day-2 SCD2 dims read and atomically replace the warehouse") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_incr").toString
+    val dir = tempDir("graft_incr")
     val day2 = Pipeline.nthLastDateWithData(t, 0).get
     val day1 = Pipeline.nthLastDateWithData(t, 1).get
     Pipeline.load(Pipeline.run(spark, t, day1), dir)
@@ -86,7 +87,7 @@ class PipelineSpec extends GraftSpec {
   }
 
   test("EtlMain.runOnce is incremental: two days accumulate, history survives, SKs resolve") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_etlmain").toString
+    val dir = tempDir("graft_etlmain")
     val day1 = Pipeline.nthLastDateWithData(t, 1).get
     val day2 = Pipeline.nthLastDateWithData(t, 0).get
     EtlMain.runOnce(spark, t, dir, day1)
@@ -106,7 +107,7 @@ class PipelineSpec extends GraftSpec {
   }
 
   test("catchUp processes exactly the missed days after the high-water mark (R5)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_catchup").toString
+    val dir = tempDir("graft_catchup")
     val day3 = Pipeline.nthLastDateWithData(t, 2).get
     EtlMain.runOnce(spark, t, dir, day3) // bootstrap: high water = day3
     val processed = EtlMain.catchUp(spark, t, dir, limit = 2)
@@ -118,8 +119,11 @@ class PipelineSpec extends GraftSpec {
     assert(fact.select("date_key").distinct().count() === 3)
   }
 
+  private def logRows(dir: String) =
+    spark.read.parquet(s"$dir/load_logs").orderBy("start_time").collect().toSeq
+
   test("load writes a date-partitioned warehouse and dim_date anti-insert dedupes") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_wh").toString
+    val dir = tempDir("graft_wh")
     val day = Pipeline.nthLastDateWithData(t, 0).get
     val out = Pipeline.run(spark, t, day)
     Pipeline.load(out, dir)
@@ -129,5 +133,55 @@ class PipelineSpec extends GraftSpec {
     val fact = spark.read.parquet(s"$dir/fact_deliveries")
     assert(fact.count() === out.fact.count() * 2) // fact appends by design
     assert(fact.columns.contains("p_date_key"))
+    // dim_date logs the rows its anti-join inserted: the day, then none
+    val dimDateLogged = logRows(dir).filter(_.getAs[String]("table_name") == "dim_date")
+      .map(_.getAs[Long]("records_inserted"))
+    assert(dimDateLogged === Seq(1L, 0L))
+  }
+
+  test("load logs each step with its own times and rows, and releases the shared frames") {
+    val dir = tempDir("graft_log")
+    val day = Pipeline.nthLastDateWithData(t, 0).get
+    val out = Pipeline.run(spark, t, day)
+    Pipeline.load(out, dir)
+    assert(out.shared.nonEmpty && out.shared.forall(_.storageLevel == StorageLevel.NONE))
+    val rows = logRows(dir)
+    assert(rows.map(_.getAs[String]("table_name")).toSet === Set("fact_deliveries",
+      "report_driver_totals", "report_route_totals", "staging_daily_load", "dim_date",
+      "dim_time", "dim_route", "dim_customer", "dim_vehicle", "dim_driver"))
+    assert(rows.forall(r => r.getAs[String]("status") == "success" &&
+      r.getAs[String]("process_name") == s"etl_$day" && r.isNullAt(r.fieldIndex("error_message"))))
+    // steps run one after another, each row spanning only its own step
+    val spans = rows.map(r => (r.getAs[java.sql.Timestamp]("start_time"),
+      r.getAs[java.sql.Timestamp]("end_time")))
+    assert(spans.forall { case (s, e) => !e.before(s) })
+    spans.sliding(2).foreach { case Seq((_, e1), (s2, _)) => assert(!s2.before(e1)) }
+    val logged = rows.map(r => r.getAs[String]("table_name") -> r.getAs[Long]("records_inserted")).toMap
+    Seq("fact_deliveries", "report_driver_totals", "dim_vehicle", "dim_driver", "dim_time")
+      .foreach(tb => assert(logged(tb) === spark.read.parquet(s"$dir/$tb").count(), tb))
+    // one log file for the whole batch
+    assert(new java.io.File(s"$dir/load_logs").listFiles()
+      .count(_.getName.endsWith(".parquet")) === 1)
+  }
+
+  test("a failing step logs its failure, keeps the earlier steps' rows and reaches the caller") {
+    val dir = tempDir("graft_fail")
+    val day = Pipeline.nthLastDateWithData(t, 0).get
+    val out = Pipeline.run(spark, t, day)
+    val broken = out.copy(reports = out.reports.map {
+      case ("report_route_totals", df) =>
+        "report_route_totals" -> df.withColumn("boom", assert_true(col("total_deliveries") < 0))
+      case other => other
+    })
+    val e = intercept[Exception](Pipeline.load(broken, dir))
+    assert(out.shared.forall(_.storageLevel == StorageLevel.NONE))
+    val rows = logRows(dir)
+    val status = rows.map(r => r.getAs[String]("table_name") -> r.getAs[String]("status"))
+    assert(status.filter(_._2 == "failed") === Seq("report_route_totals" -> "failed"))
+    assert(status.filter(_._2 == "success").map(_._1).toSet ===
+      Set("fact_deliveries") ++ out.reports.keys.takeWhile(_ != "report_route_totals"))
+    val failed = rows.find(_.getAs[String]("status") == "failed").get
+    assert(failed.getAs[String]("error_message") === e.toString)
+    assert(!new java.io.File(s"$dir/dim_vehicle").exists(), "no dim is published after a failed step")
   }
 }

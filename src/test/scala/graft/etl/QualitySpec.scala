@@ -16,7 +16,7 @@ class QualitySpec extends GraftSpec {
   }
 
   test("warehouse schema validation reports missing tables") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_q").toString
+    val dir = tempDir("graft_q")
     val tables = DataGen.all(spark, DataGen.Config(nTrips = 500, nMaintenance = 50))
     val t = Oltp(tables("vehicles"), tables("drivers"), tables("routes"),
       tables("trips"), tables("deliveries"), tables("maintenance"))
@@ -28,7 +28,7 @@ class QualitySpec extends GraftSpec {
   }
 
   test("JSON staging round-trips the extract losslessly") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stg").toString
+    val dir = tempDir("graft_stg")
     val tables = DataGen.all(spark, DataGen.Config(nTrips = 1000, nMaintenance = 50))
     val t = Oltp(tables("vehicles"), tables("drivers"), tables("routes"),
       tables("trips"), tables("deliveries"), tables("maintenance"))

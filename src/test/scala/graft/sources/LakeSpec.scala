@@ -153,4 +153,36 @@ class LakeSpec extends GraftSpec {
     }
     assert(e.getMessage.contains("partition"))
   }
+
+  test("publishCopy swaps in a file copy of the source, replacing a stale staging dir") {
+    import spark.implicits._
+    val root = tempDir("graft_publish")
+    val (src, dir) = (s"$root/snap", s"$root/live")
+    spark.range(500).select($"id", ($"id" % 7).as("k")).repartition(3)
+      .write.parquet(src)
+    spark.range(10).write.parquet(dir)  // old live content
+    // a crashed run's half-staged copy
+    new java.io.File(s"${dir}__tmp").mkdirs()
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"${dir}__tmp/part-stale.parquet"),
+      Array[Byte](1, 2, 3))
+    Lake.publishCopy(spark, src, dir)
+    def files(d: String) = new java.io.File(d).listFiles().map(_.getName).sorted.toSeq
+    assert(files(dir) === files(src))
+    val back = spark.read.parquet(dir)
+    assert(back.exceptAll(spark.read.parquet(src)).isEmpty && back.count() === 500)
+    val siblings = files(root)
+    assert(!siblings.exists(n => n.endsWith("__tmp") || n.endsWith("__bak")), siblings)
+    // the source snapshot stays in place
+    assert(spark.read.parquet(src).count() === 500)
+  }
+
+  test("writeCounted returns the rows the write itself wrote") {
+    import spark.implicits._
+    val dir = tempDir("graft_counted")
+    val df = spark.range(1000).select($"id", ($"id" % 5).as("p"))
+    assert(Lake.writeCounted(df)(_.write.partitionBy("p").parquet(s"$dir/a")) === 1000L)
+    assert(Lake.writeCounted(df.filter($"id" < 0))(_.write.parquet(s"$dir/b")) === 0L)
+    assert(Lake.writeCounted(df)(Lake.atomicOverwrite(_, s"$dir/a")) === 1000L)
+    assert(spark.read.parquet(s"$dir/a").count() === 1000L)
+  }
 }
