@@ -324,7 +324,8 @@ object DataGen {
         col("performed_by"))
   }
 
-  /** Generate and write every table as parquet, logging one audit row
+  /** Generate and write every table as parquet, the tables concurrently
+    * ([[LoadLog.batch]]), logging one audit row
     * per table to `load_logs` (S4 batch-insert sink + G10 audit,
     * ref 01_data_generation.py:42-72 — Spark's task-parallel write IS
     * the chunked executemany). Returns the rows written per table. */
@@ -361,11 +362,8 @@ object DataGen {
         df.coalesce(1).write.mode("overwrite").parquet(s"$dir/$name")
       }
     }
-    LoadLog.batch(spark, dir, t => s"datagen_$t") { log =>
-      all(spark, cfg).map { case (name, df) =>
-        name -> log.step(name)(graft.sources.Lake.writeCounted(df)(layOut(name, _)))
-      }
-    }
+    LoadLog.batch(spark, dir, t => s"datagen_$t")(
+      all(spark, cfg).map { case (name, df) => LoadLog.write(name, df)(layOut(name, _)) }.toSeq)
   }
 
   /** All seven tables, FK-consistent, fully deterministic. */

@@ -1,6 +1,7 @@
 package graft.etl
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 
 /** Daily-ETL CLI (reference entry point 1: `python etl_pipeline.py
   * --date/--nth`, etl_pipeline.py:1285-1313 + run_etl_scheduler.py —
@@ -27,17 +28,16 @@ object EtlMain {
     * batch id continues from the warehouse's high-water mark. A missing
     * warehouse bootstraps from empty dims (batch 1). */
   def runOnce(spark: SparkSession, t: Oltp, warehouse: String,
-      targetDate: String): Pipeline.EtlOutput = {
-    def existing(table: String): Option[org.apache.spark.sql.DataFrame] =
+      targetDate: String): Pipeline.EtlOutput =
+    loadDay(spark, t, warehouse, targetDate,
+      highWater(spark, warehouse).fold(1L)(_._2 + 1L))
+
+  private def loadDay(spark: SparkSession, t: Oltp, warehouse: String,
+      targetDate: String, batchId: Long): Pipeline.EtlOutput = {
+    def existing(table: String): Option[DataFrame] =
       if (Quality.missingTables(spark, warehouse, Seq(table)).isEmpty)
         Some(spark.read.parquet(s"$warehouse/$table"))
       else None
-    val batchId = existing("fact_deliveries")
-      .map { f =>
-        val m = f.agg(org.apache.spark.sql.functions.max("etl_batch_id")).head()
-        (if (m.isNullAt(0)) 0L else m.getLong(0)) + 1L
-      }
-      .getOrElse(1L)
     val out = Pipeline.run(spark, t, targetDate,
       existingDimVehicle = existing("dim_vehicle"),
       existingDimDriver = existing("dim_driver"),
@@ -46,33 +46,40 @@ object EtlMain {
     out
   }
 
+  /** The loaded fact's high-water mark, read in one aggregate: its last
+    * day (`yyyy-MM-dd`) and last batch id. None while no fact row is
+    * loaded. */
+  private def highWater(spark: SparkSession, warehouse: String): Option[(String, Long)] =
+    if (Quality.missingTables(spark, warehouse, Seq("fact_deliveries")).nonEmpty) None
+    else {
+      val m = spark.read.parquet(s"$warehouse/fact_deliveries")
+        .agg(max("date_key"), max("etl_batch_id")).head()
+      if (m.isNullAt(0)) None
+      else {
+        val k = m.getInt(0).toString
+        Some((s"${k.substring(0, 4)}-${k.substring(4, 6)}-${k.substring(6, 8)}", m.getLong(1)))
+      }
+    }
+
   /** Catch-up over missed days (the CLI completion of the reference's
     * run_etl_scheduler.py:41-70 `--once` daily poll): every day with
     * delivered data STRICTLY AFTER the warehouse's loaded high-water
     * mark runs as its own incremental batch, oldest first, up to
-    * `limit` days per invocation. Returns the days processed. */
+    * `limit` days per invocation, with consecutive batch ids from the
+    * same mark. Returns the days processed. */
   def catchUp(spark: SparkSession, t: Oltp, warehouse: String,
       limit: Int = 7): Seq[String] = {
-    import org.apache.spark.sql.functions._
-    val highWater: Option[String] =
-      if (Quality.missingTables(spark, warehouse, Seq("fact_deliveries")).isEmpty) {
-        val m = spark.read.parquet(s"$warehouse/fact_deliveries")
-          .agg(max("date_key")).head()
-        if (m.isNullAt(0)) None
-        else {
-          val k = m.getInt(0).toString
-          Some(s"${k.substring(0, 4)}-${k.substring(4, 6)}-${k.substring(6, 8)}")
-        }
-      } else None
+    val hw = highWater(spark, warehouse)
     val pending = t.deliveries
       .filter(col("delivery_status") === "delivered" &&
         col("delivered_datetime").isNotNull)
       .select(to_date(col("delivered_datetime")).as("d")).distinct()
-      .filter(highWater.map(hw => col("d") > to_date(lit(hw))).getOrElse(lit(true)))
+      .filter(hw.map { case (day, _) => col("d") > to_date(lit(day)) }.getOrElse(lit(true)))
       .orderBy(col("d"))
       .limit(limit)
       .collect().map(_.getDate(0).toString).toSeq
-    pending.foreach(d => runOnce(spark, t, warehouse, d))
+    val firstBatch = hw.fold(0L)(_._2) + 1L
+    pending.zipWithIndex.foreach { case (d, i) => loadDay(spark, t, warehouse, d, firstBatch + i) }
     pending
   }
 
@@ -122,7 +129,6 @@ object EtlMain {
     val batch = runOnce(spark, t, warehouse, targetDate)
     // the batch's lineage reads the dims its load replaced: everything
     // after the load reads the loaded tables back from the warehouse
-    import org.apache.spark.sql.functions._
     val out = batch.copy(
       fact = spark.read.parquet(s"$warehouse/fact_deliveries")
         .filter(col("p_date_key") === targetDate.replace("-", "").toInt)

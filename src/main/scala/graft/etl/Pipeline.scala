@@ -133,57 +133,63 @@ object Pipeline {
     * anti-join-insert (S7, ref load_dim_date_if_not_exists :978-1024).
     * Each table's write is one step of the batch's `load_logs` (G10,
     * ref 01_data_generation.py:42-72), its row count observed by the
-    * write itself. Dims are written once, to `snapshots/<batch date>/`
-    * — the parquet-lake analog of the DW's 30-day Time Travel retention
+    * write itself, and the steps run concurrently ([[LoadLog.batch]]).
+    * Dims are written once, to `snapshots/<batch date>/` — the
+    * parquet-lake analog of the DW's 30-day Time Travel retention
     * (ref 04:162-168, SURVEY X13) — and published to the live path as
     * a copy of those files.
     *
     * The batch's shared intermediates are persisted for the duration of
     * the load (in dependency order, so each cached plan reads the
-    * caches below it) and released however it ends. */
+    * caches below it), shared by the steps that read them, and released
+    * however the load ends. */
   def load(out: EtlOutput, warehouseDir: String): Unit = {
     val spark = out.fact.sparkSession
     val owned = out.shared.filter(_.storageLevel == StorageLevel.NONE)
     owned.foreach(_.persist(StorageLevel.MEMORY_AND_DISK))
-    try LoadLog.batch(spark, warehouseDir, _ => s"etl_${out.targetDate}") { log =>
-      def write(table: String, df: DataFrame)(w: DataFrame => Unit): Unit =
-        log.step(table)(Lake.writeCounted(df)(w))
-      // ORDER MATTERS in the incremental flow: the fact's PIT lineage
-      // and the SCD2 dims all READ the warehouse dim directories this
-      // load replaces. Fact, reports and staging are written FIRST; each
-      // dim is then written once into its batch snapshot (inputs still
-      // intact) and the live path swapped in from the snapshot's files —
-      // no write ever reads a directory after it has been replaced, and
-      // a cache block evicted after a swap never feeds a write.
-      write("fact_deliveries", out.fact)(
+    try {
+      // Invariant: no Spark write runs after any live dim directory has
+      // been replaced. The fact's PIT lineage, the SCD2 dims and
+      // dim_date's anti-join all READ the live dim directories this load
+      // replaces, so every table is written first, concurrently, with
+      // each dim going to its batch snapshot; only once every write has
+      // succeeded are the live dims swapped in from the snapshots'
+      // files. No write reads a replaced directory, a cache block
+      // evicted and recomputed never sees a new dim, and a failed batch
+      // leaves the live dims as they were.
+      def snapshot(dim: String) = s"$warehouseDir/snapshots/${out.targetDate}/$dim"
+      val factStep = LoadLog.write("fact_deliveries", out.fact)(
         _.withColumn("p_date_key", col("date_key"))
           .write.mode("append").partitionBy("p_date_key")
           .parquet(s"$warehouseDir/fact_deliveries"))
-      out.reports.foreach { case (name, df) =>
-        write(name, df)(Lake.atomicOverwrite(_, s"$warehouseDir/$name"))
+      val reportSteps = out.reports.map { case (name, df) =>
+        LoadLog.write(name, df)(Lake.atomicOverwrite(_, s"$warehouseDir/$name"))
       }
-      write("staging_daily_load", out.stagingAudit)(
+      val stagingStep = LoadLog.write("staging_daily_load", out.stagingAudit)(
         _.write.mode("append").parquet(s"$warehouseDir/staging_daily_load"))
-
-      out.dims.foreach {
+      val dimSteps = out.dims.map {
         case (name @ "dim_date", df) =>
-          val path = s"$warehouseDir/$name"
-          val toInsert =
-            if (Quality.missingTables(spark, warehouseDir, Seq(name)).nonEmpty) df
-            else df.join(spark.read.parquet(path).select("date_key"), Seq("date_key"),
-              "left_anti")
-          write(name, toInsert)(_.write.mode("append").parquet(path))
-        case (name, df) =>
-          val snap = s"$warehouseDir/snapshots/${out.targetDate}/$name"
-          log.step(name) {
-            // a cached dim keeps one partition per shuffle partition;
-            // rebalance lets AQE size the snapshot's files by its bytes
-            val n = Lake.writeCounted(df)(
-              _.hint("rebalance").write.mode("overwrite").parquet(snap))
-            Lake.publishCopy(spark, snap, s"$warehouseDir/$name")
-            n
+          // the snapshot is the live rows plus the batch's new dates, one
+          // row per day, so one file; the step counts only the inserts
+          val live =
+            if (Quality.missingTables(spark, warehouseDir, Seq(name)).nonEmpty) None
+            else Some(spark.read.parquet(s"$warehouseDir/$name"))
+          val toInsert = live.fold(df)(l =>
+            df.join(l.select("date_key"), Seq("date_key"), "left_anti"))
+          LoadLog.write(name, toInsert) { inserted =>
+            live.fold(inserted)(_.unionByName(inserted))
+              .coalesce(1).write.mode("overwrite").parquet(snapshot(name))
           }
+        case (name, df) =>
+          // a cached dim keeps one partition per shuffle partition;
+          // rebalance lets AQE size the snapshot's files by its bytes
+          LoadLog.write(name, df)(
+            _.hint("rebalance").write.mode("overwrite").parquet(snapshot(name)))
       }
+      LoadLog.batch(spark, warehouseDir, _ => s"etl_${out.targetDate}")(
+        Seq(factStep) ++ reportSteps ++ Seq(stagingStep) ++ dimSteps)
+      out.dims.keys.foreach(dim =>
+        Lake.publishCopy(spark, snapshot(dim), s"$warehouseDir/$dim"))
     } finally owned.foreach(_.unpersist())
   }
 }

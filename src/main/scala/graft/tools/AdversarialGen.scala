@@ -488,20 +488,18 @@ object AdversarialGen {
     // fixture claims byte-stability (modulo the log's timestamps)
     org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
       .delete(new org.apache.hadoop.fs.Path(s"$dir/load_logs"), true): Unit
-    LoadLog.batch(spark, dir, t => s"datagen_$t") { log =>
-      withPlants.foreach { case (name, df) =>
-        log.step(name)(graft.sources.Lake.writeCounted(df) { df =>
-          if (name == "deliveries") {
-            val parted = df
-              .withColumn("p_month",
-                trunc(col("delivered_datetime").cast("date"), "month"))
-              .repartition(col("p_month"))
-              .sortWithinPartitions(col("p_month"), col("delivered_datetime"))
-            graft.sources.Lake.writePartitioned(parted, s"$dir/$name", Seq("p_month"))
-          } else df.write.mode("overwrite").parquet(s"$dir/$name")
-        })
+    LoadLog.batch(spark, dir, t => s"datagen_$t")(withPlants.map { case (name, df) =>
+      LoadLog.write(name, df) { df =>
+        if (name == "deliveries") {
+          val parted = df
+            .withColumn("p_month",
+              trunc(col("delivered_datetime").cast("date"), "month"))
+            .repartition(col("p_month"))
+            .sortWithinPartitions(col("p_month"), col("delivered_datetime"))
+          graft.sources.Lake.writePartitioned(parted, s"$dir/$name", Seq("p_month"))
+        } else df.write.mode("overwrite").parquet(s"$dir/$name")
       }
-    }
+    }.toSeq)
     new java.io.File(dir, "_OLTP_READY").createNewFile(): Unit
   }
 }

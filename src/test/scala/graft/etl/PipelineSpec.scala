@@ -119,6 +119,17 @@ class PipelineSpec extends GraftSpec {
     assert(fact.select("date_key").distinct().count() === 3)
   }
 
+  test("catchUp numbers its batches on from the high-water mark, one per day") {
+    val dir = tempDir("graft_batch_ids")
+    val days = (2 to 0 by -1).map(n => Pipeline.nthLastDateWithData(t, n).get)
+    EtlMain.runOnce(spark, t, dir, days.head)
+    assert(EtlMain.catchUp(spark, t, dir, limit = 2) === days.tail)
+    val ids = spark.read.parquet(s"$dir/fact_deliveries")
+      .select(col("date_key"), col("etl_batch_id")).distinct().orderBy("date_key")
+      .collect().map(_.getLong(1)).toSeq
+    assert(ids === Seq(1L, 2L, 3L))
+  }
+
   private def logRows(dir: String) =
     spark.read.parquet(s"$dir/load_logs").orderBy("start_time").collect().toSeq
 
@@ -139,23 +150,28 @@ class PipelineSpec extends GraftSpec {
     assert(dimDateLogged === Seq(1L, 0L))
   }
 
+  private val loadTables = Set("fact_deliveries", "report_driver_totals", "report_route_totals",
+    "staging_daily_load", "dim_date", "dim_time", "dim_route", "dim_customer", "dim_vehicle",
+    "dim_driver")
+
   test("load logs each step with its own times and rows, and releases the shared frames") {
     val dir = tempDir("graft_log")
     val day = Pipeline.nthLastDateWithData(t, 0).get
     val out = Pipeline.run(spark, t, day)
+    val before = new java.sql.Timestamp(System.currentTimeMillis())
     Pipeline.load(out, dir)
+    val after = new java.sql.Timestamp(System.currentTimeMillis())
     assert(out.shared.nonEmpty && out.shared.forall(_.storageLevel == StorageLevel.NONE))
     val rows = logRows(dir)
-    assert(rows.map(_.getAs[String]("table_name")).toSet === Set("fact_deliveries",
-      "report_driver_totals", "report_route_totals", "staging_daily_load", "dim_date",
-      "dim_time", "dim_route", "dim_customer", "dim_vehicle", "dim_driver"))
+    // exactly one row per table
+    assert(rows.map(_.getAs[String]("table_name")).sorted === loadTables.toSeq.sorted)
     assert(rows.forall(r => r.getAs[String]("status") == "success" &&
       r.getAs[String]("process_name") == s"etl_$day" && r.isNullAt(r.fieldIndex("error_message"))))
-    // steps run one after another, each row spanning only its own step
-    val spans = rows.map(r => (r.getAs[java.sql.Timestamp]("start_time"),
-      r.getAs[java.sql.Timestamp]("end_time")))
-    assert(spans.forall { case (s, e) => !e.before(s) })
-    spans.sliding(2).foreach { case Seq((_, e1), (s2, _)) => assert(!s2.before(e1)) }
+    // the steps run concurrently: each row spans its own step, inside the load call
+    rows.foreach { r =>
+      val (s, e) = (r.getAs[java.sql.Timestamp]("start_time"), r.getAs[java.sql.Timestamp]("end_time"))
+      assert(!s.before(before) && !e.before(s) && !after.before(e), r)
+    }
     val logged = rows.map(r => r.getAs[String]("table_name") -> r.getAs[Long]("records_inserted")).toMap
     Seq("fact_deliveries", "report_driver_totals", "dim_vehicle", "dim_driver", "dim_time")
       .foreach(tb => assert(logged(tb) === spark.read.parquet(s"$dir/$tb").count(), tb))
@@ -178,10 +194,65 @@ class PipelineSpec extends GraftSpec {
     val rows = logRows(dir)
     val status = rows.map(r => r.getAs[String]("table_name") -> r.getAs[String]("status"))
     assert(status.filter(_._2 == "failed") === Seq("report_route_totals" -> "failed"))
-    assert(status.filter(_._2 == "success").map(_._1).toSet ===
-      Set("fact_deliveries") ++ out.reports.keys.takeWhile(_ != "report_route_totals"))
+    assert(status.filter(_._2 == "success").map(_._1).sorted ===
+      (loadTables - "report_route_totals").toSeq.sorted)
     val failed = rows.find(_.getAs[String]("status") == "failed").get
     assert(failed.getAs[String]("error_message") === e.toString)
-    assert(!new java.io.File(s"$dir/dim_vehicle").exists(), "no dim is published after a failed step")
+    out.dims.keys.foreach(dim => assert(!new java.io.File(s"$dir/$dim").exists(),
+      s"$dim is published after a failed step"))
+  }
+
+  test("a failed incremental batch leaves every live dim as the previous batch left it") {
+    val dir = tempDir("graft_fail_incr")
+    val day1 = Pipeline.nthLastDateWithData(t, 1).get
+    val day2 = Pipeline.nthLastDateWithData(t, 0).get
+    EtlMain.runOnce(spark, t, dir, day1)
+    val dims = loadTables.filter(_.startsWith("dim_")).toSeq
+    def live() = dims.map(d => d -> spark.read.parquet(s"$dir/$d").collect().map(_.toString).sorted.toSeq)
+    val afterDay1 = live()
+    val out2 = Pipeline.run(spark, t, day2,
+      existingDimVehicle = Some(spark.read.parquet(s"$dir/dim_vehicle")),
+      existingDimDriver = Some(spark.read.parquet(s"$dir/dim_driver")),
+      etlBatchId = 2L)
+    val broken = out2.copy(dims = out2.dims.updated("dim_customer",
+      out2.dims("dim_customer").withColumn("boom", assert_true(lit(false)))))
+    intercept[Exception](Pipeline.load(broken, dir))
+    assert(logRows(dir).filter(_.getAs[String]("status") == "failed")
+      .map(_.getAs[String]("table_name")) === Seq("dim_customer"))
+    assert(live() === afterDay1)
+  }
+
+  test("every job of a load carries the caller's job group") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val dir = tempDir("graft_group")
+    val out = Pipeline.run(spark, t, Pipeline.nthLastDateWithData(t, 0).get)
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse("<none>"))
+    }
+    // the listener bus delivers events in order: the jobs between the
+    // two markers' jobs are exactly the load's
+    def marker(name: String): Unit = {
+      sc.setJobGroup(name, name)
+      try spark.range(1).count() finally sc.clearJobGroup()
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker("before-load")
+      sc.setJobGroup("load-group", "a load under a job group")
+      try Pipeline.load(out, dir) finally sc.clearJobGroup()
+      marker("after-load")
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!groups.contains("after-load") && System.nanoTime() < deadline) Thread.sleep(20)
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val seen = groups.asScala.toSeq
+    assert(seen.contains("after-load"), "the marker job's start event never arrived")
+    val load = seen.dropWhile(_ != "before-load").dropWhile(_ == "before-load")
+      .takeWhile(_ != "after-load")
+    assert(load.nonEmpty && load.forall(_ == "load-group"), load.distinct)
   }
 }
