@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs every registered query on
   * SPARK_GRAFT_SF_DIR, prints one JSON line with per-query seconds.
   *
@@ -33,25 +31,7 @@ object Bench {
     require(unknownNames.isEmpty,
       s"unknown entry name(s): ${unknownNames.toSeq.sorted.mkString(", ")}")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // r15 tried parallelismFirst=false + advisory sizing here and
-      // REVERTED it same-session: KB-sized tiny stages already
-      // coalesce under the default policy (minPartitionSize floors
-      // them), while the compute-heavy small-BYTE shuffles (the q33
-      // Jaccard block join, the q127 wedge closure, q135's decrement
-      // probes) collapsed to 1 task by pure size and serialized —
-      // q33 0.72→2.07 s, q135 3.6→5.6 s in the mid-round sweep.
-      // parallelismFirst=true is the right default for mixed
-      // compute-per-byte workloads; per-loop widths stay governed by
-      // IterScope (spark.graft.loop.partitions).
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession("graft-bench")
     spark.sparkContext.setLogLevel(
       sys.env.getOrElse("SPARK_GRAFT_LOG_LEVEL", "ERROR"))
 

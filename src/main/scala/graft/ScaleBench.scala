@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scaling-curve benchmark (PERF.md): runs the corpus operators (dedup
   * / similarity / text, SURVEY §2.14 E-ops) over CorpusGen corpora at
   * 1× / 10× / 50× the sf0.1 corpus size (5k/50k/250k docs — 2k/20k/100k
@@ -263,15 +261,7 @@ object ScaleBench {
               .map(p => p.group(1) -> p.group(2).toDouble).toMap
         }.toMap
       }.getOrElse(Map.empty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scalebench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession("graft-scalebench")
     spark.sparkContext.setLogLevel("ERROR")
 
     val defs = SparkEntry.allDefs.map(q => q.name -> q).toMap

@@ -8,13 +8,7 @@ object Verify {
     // optional trailing args: entry names to restrict the dump to
     // (driver passes none → full dump)
     val (sfDir, outDir, only) = (args(0), args(1), args.drop(2).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession("graft-verify")
     // optional session-conf injection (e.g. forcing the q127 wedge-
     // budget dispatch for a restated-oracle differential dump):
     // SPARK_GRAFT_CONF="k=v;k2=v2"

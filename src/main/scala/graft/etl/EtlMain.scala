@@ -90,15 +90,7 @@ object EtlMain {
     val warehouse = opts.getOrElse("warehouse",
       sys.error("--warehouse <dir> is required"))
 
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").filter(_.nonEmpty)
-      .getOrElse(Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-etl")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession("graft-etl")
     spark.sparkContext.setLogLevel("WARN")
 
     val t = opts.get("oltp") match {

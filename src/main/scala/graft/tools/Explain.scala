@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc plan/job profiler: runs named entries once warm, then once
   * measured with a job counter, and prints the formatted physical plan
   * — the `.explain("formatted")` iteration loop the build doctrine
@@ -14,14 +12,7 @@ object Explain {
     val showPlan = args.contains("--plan")
     val rest = args.filterNot(_ == "--plan")
     val (sfDir, names) = (rest.head, rest.tail.toSeq)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-explain")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession("graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
     val jobs = new java.util.concurrent.atomic.AtomicLong
     spark.sparkContext.addSparkListener(

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** sf1.0 stress-corpus generator (the r8 verdict's "one full-surface
@@ -29,10 +29,7 @@ object Sf1Gen {
   def main(args: Array[String]): Unit = {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = args.drop(1).headOption.getOrElse("target/sf1.0")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession("graft-sf1gen")
     spark.sparkContext.setLogLevel("WARN")
     val marker = new java.io.File(out, "_SF1_READY")
     if (marker.exists()) { println(s"[sf1gen] $out already built"); return }

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.CorpusGen
 import graft.operators.StreamingOps
 
@@ -100,13 +98,7 @@ object SplitFuzz {
     val Array(workDir, seedsCsv) = args
     val seeds = seedsCsv.split(",").map(_.trim.toLong).toSeq
     require(seeds.nonEmpty, "empty seeds list")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession("graft-splitfuzz")
     spark.sparkContext.setLogLevel("WARN")
     seeds.foreach { seed =>
       val dir = s"$workDir/corpus_s$seed"

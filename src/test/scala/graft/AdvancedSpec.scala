@@ -64,7 +64,7 @@ class AdvancedSpec extends GraftSpec {
     // exercises ntile's uneven big-bucket branch — cover n mod 4 ≠ 0,
     // ties in the ordering column, and the n = 1 percent_rank edge
     for (n <- Seq(1, 5, 7, 13)) {
-      val dir = java.nio.file.Files.createTempDirectory(s"graft-q55-$n").toString
+      val dir = tempDir(s"graft-q55-$n")
       val rnd = new scala.util.Random(n)
       val rows = (1 to n).map(i =>
         (i.toLong, math.floor(rnd.nextDouble() * 30) / 10)) // ties likely
@@ -1277,7 +1277,7 @@ class AdvancedSpec extends GraftSpec {
     // latent bug dropped exactly these rows and no corpus at any SF
     // ever contained a min-delay tie on the frontier (global-min delay
     // was unique in every fixture — verified sf0.01 through sf10).
-    val dir = java.nio.file.Files.createTempDirectory("q146tie").toString
+    val dir = tempDir("q146tie")
     Seq(
       (1L, 100.00, "1996-01-01"),  // delay 5, lowest price — the TIE row
       (2L, 200.00, "1996-01-01"),  // delay 5, mid price

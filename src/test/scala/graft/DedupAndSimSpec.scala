@@ -57,9 +57,9 @@ class TextFunctionsSpec extends GraftSpec {
       (2L, "solo"))               // single token: ratios 1.0, no bigrams
       .toDF("doc_id", "text")
     val q60 = SparkEntry.queries("q60_repetition_stats")
-    val dir = java.nio.file.Files.createTempDirectory("q60spec")
+    val dir = tempDir("q60spec")
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = q60(spark, dir.toString)
+    val out = q60(spark, dir)
       .as[(Long, Int, Double, Double, Int, Double)].collect().toSeq
     assert(out === Seq(
       (0L, 5, 0.4, 0.8, 4, 0.5),   // 2 distinct of 5; a: 4/5; run 4; 1 - 2/4
@@ -76,9 +76,9 @@ class TextFunctionsSpec extends GraftSpec {
       (10L, "a", doc(300)), (11L, "a", doc(300)), (12L, "a", doc(424)),
       (20L, "b", doc(600)))
       .toDF("doc_id", "source", "text")
-    val dir = java.nio.file.Files.createTempDirectory("q63spec")
+    val dir = tempDir("q63spec")
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = SparkEntry.queries("q63_sequence_packing")(spark, dir.toString)
+    val out = SparkEntry.queries("q63_sequence_packing")(spark, dir)
       .as[(Long, String, Int, Long, Long, Int, Boolean)].collect().toSeq
     assert(out === Seq(
       (10L, "a", 300, 0L, 0L, 0, false),
@@ -95,9 +95,9 @@ class TextFunctionsSpec extends GraftSpec {
       (1L, "s0", "shared common word other thing"),
       (2L, "s0", "shared common beta gamma delta"))
       .toDF("doc_id", "source", "text")
-    val dir = java.nio.file.Files.createTempDirectory("q64spec")
+    val dir = tempDir("q64spec")
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val top = SparkEntry.queries("q64_tfidf_terms")(spark, dir.toString)
+    val top = SparkEntry.queries("q64_tfidf_terms")(spark, dir)
       .filter($"doc_id" === 0 && $"rnk" === 1)
       .as[(Long, Int, String, Double)].collect()
     assert(top.toSeq === Seq((0L, 1, "rare", 6.0)))
@@ -110,9 +110,9 @@ class TextFunctionsSpec extends GraftSpec {
       (2L, "s0", (1 to 15).map(i => s"z$i").mkString(" ")), // training, clean
       (100L, "s0", g13 + " evaltail"))           // eval probe
       .toDF("doc_id", "source", "text")
-    val dir2 = java.nio.file.Files.createTempDirectory("q65spec")
+    val dir2 = tempDir("q65spec")
     cont.write.mode("overwrite").parquet(s"$dir2/documents.parquet")
-    val flagged = SparkEntry.queries("q65_decontaminate")(spark, dir2.toString)
+    val flagged = SparkEntry.queries("q65_decontaminate")(spark, dir2)
       .as[(Long, Long)].collect()
     assert(flagged.toSeq === Seq((1L, 1L)))
   }
@@ -127,9 +127,9 @@ class TextFunctionsSpec extends GraftSpec {
       (2L, "s0", (1 to 15).map(i => s"z$i").mkString(" ")),
       (100L, "s0", g13 + " evaltail"))
       .toDF("doc_id", "source", "text")
-    val dir = java.nio.file.Files.createTempDirectory("q71spec")
+    val dir = tempDir("q71spec")
     cont.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val bloom = SparkEntry.queries("q71_bloom_decontaminate")(spark, dir.toString)
+    val bloom = SparkEntry.queries("q71_bloom_decontaminate")(spark, dir)
       .as[(Long, Long)].collect().toMap
     assert(bloom === Map(1L -> 1L))
 
@@ -463,9 +463,9 @@ class DedupSpec extends GraftSpec {
     val docs = Seq(
       (0L, "s", "a a b"), (1L, "s", "a c"), (2L, "s", "b"))
       .toDF("doc_id", "source", "text")
-    val dir = java.nio.file.Files.createTempDirectory("q62spec")
+    val dir = tempDir("q62spec")
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = SparkEntry.queries("q62_vocab_topk")(spark, dir.toString)
+    val out = SparkEntry.queries("q62_vocab_topk")(spark, dir)
       .as[(String, Long, Long)].collect().toSeq
     // a: tf 3 (2+1) in 2 docs; b: tf 2 in 2 docs; c: tf 1 in 1 doc
     assert(out === Seq(("a", 3L, 2L), ("b", 2L, 2L), ("c", 1L, 1L)))

@@ -248,7 +248,7 @@ class PlanSpec extends GraftSpec {
 
   test("partition pruning on the date-partitioned fact (S8/X2)") {
     import graft.etl._
-    val dir = java.nio.file.Files.createTempDirectory("graft_prune").toString
+    val dir = tempDir("graft_prune")
     val tables = DataGen.all(spark, DataGen.Config(nTrips = 500, nMaintenance = 50))
     val t = Oltp(tables("vehicles"), tables("drivers"), tables("routes"),
       tables("trips"), tables("deliveries"), tables("maintenance"))
@@ -264,7 +264,7 @@ class PlanSpec extends GraftSpec {
 
   test("daily ETL extract prunes the date-partitioned deliveries store (S2/X2)") {
     import graft.etl._
-    val dir = java.nio.file.Files.createTempDirectory("graft_oltp_prune").toString
+    val dir = tempDir("graft_oltp_prune")
     val cfg = DataGen.Config(nTrips = 500, nMaintenance = 50)
     DataGen.writeAll(spark, cfg, dir)
     def rd(n: String) = spark.read.parquet(s"$dir/$n")

@@ -1,44 +1,43 @@
 package graft.operators
 
 import graft.GraftSpec
-import graft.etl.Dimensions
+import graft.etl.{DataGen, Dimensions}
 
-/** Session-cache lifecycle contract of [[FleetOps]] (advice r4/r5): a
-  * long-lived JVM hosting many sessions must not accumulate cache
-  * entries for dead sessions. The application-end listener is a direct
-  * shim over [[FleetOps.evict]]; stopping the shared test context would
-  * kill every other suite in the forked JVM, so the spec drives `evict`
-  * itself and checks the full map/slot surface through
-  * [[FleetOps.boundEntryCount]].
+/** Session-cache lifecycle contract of [[FleetOps]]: a long-lived JVM
+  * hosting many sessions must not accumulate cache entries for dead
+  * sessions, nor serve a previous corpus after `reconfigure`. Stopping
+  * the shared test context would kill every other suite in the forked
+  * JVM, so the spec drives [[SessionMemo.evict]] itself and checks the
+  * families bound to each session through [[SessionMemo.entries]].
   */
 class FleetOpsSpec extends GraftSpec {
 
   test("evict drops every cache entry bound to the evicted session only") {
     val s2 = spark.newSession()
-    // populate all cache families for s2: OLTP slot, ETL slot, 2-day inputs
+    def families(s: org.apache.spark.sql.SparkSession) = SessionMemo.entries(s).keySet
+    // populate the OLTP and ETL families for s2
     FleetOps.oltp(s2).vehicles.count()
     FleetOps.etl(s2).dims("dim_route").count()
-    assert(FleetOps.boundEntryCount(s2) >= 3) // oltp + etl + hook
+    assert(families(s2) === Set("fleet_oltp", "fleet_etl"))
 
     // a sibling session's entries must survive the eviction
     val s3 = spark.newSession()
     FleetOps.oltp(s3).vehicles.count()
-    val s3Before = FleetOps.boundEntryCount(s3)
-    assert(s3Before >= 2) // oltp + hook
+    assert(families(s3) === Set("fleet_oltp"))
 
-    FleetOps.evict(s2)
-    assert(FleetOps.boundEntryCount(s2) === 0)
-    assert(FleetOps.boundEntryCount(s3) === s3Before)
+    SessionMemo.evict(s2)
+    assert(families(s2).isEmpty)
+    assert(families(s3) === Set("fleet_oltp"))
 
-    // idempotent: a second application-end event is a no-op
-    FleetOps.evict(s2)
-    assert(FleetOps.boundEntryCount(s2) === 0)
+    // idempotent: a second eviction is a no-op
+    SessionMemo.evict(s2)
+    assert(families(s2).isEmpty)
 
     // the session is usable again after eviction (fresh entries rebuild)
     FleetOps.oltp(s2).drivers.count()
-    assert(FleetOps.boundEntryCount(s2) >= 2)
-    FleetOps.evict(s2)
-    FleetOps.evict(s3)
+    assert(families(s2) === Set("fleet_oltp"))
+    SessionMemo.evict(s2)
+    SessionMemo.evict(s3)
   }
 
   test("3-day SCD2 flip-back gate upholds the dim invariants") {
@@ -77,12 +76,12 @@ class FleetOpsSpec extends GraftSpec {
     // warmup would rebuild every gate input for a second session
     FleetOps.scd2TwoDay(s2, Dimensions.dimVehicle,
       "vehicle_id", Dimensions.vehicleTracked, "vehicle_sk").count()
-    assert(FleetOps.boundEntryCount(s2) >= 2)
+    assert(SessionMemo.entries(s2).keySet === Set("fleet_oltp", "fleet_scd2_2day|vehicle_sk"))
     val cachedBefore = spark.sparkContext.getPersistentRDDs.size
     assert(cachedBefore > 0) // warmup persisted something on the shared context
 
-    FleetOps.evict(s2)
-    assert(FleetOps.boundEntryCount(s2) === 0)
+    SessionMemo.evict(s2)
+    assert(SessionMemo.entries(s2).isEmpty)
     // unpersist(blocking = false) is async — poll briefly for the drop
     val deadline = System.nanoTime() + 10e9.toLong
     var after = spark.sparkContext.getPersistentRDDs.size
@@ -92,5 +91,35 @@ class FleetOpsSpec extends GraftSpec {
     }
     assert(after < cachedBefore,
       s"expected persisted RDD count to drop below $cachedBefore, still $after")
+  }
+
+  test("reconfigure serves no stale corpus: the next use rebuilds on the new dir") {
+    import org.apache.spark.storage.StorageLevel
+    val s2 = spark.newSession()
+    try {
+      val old = FleetOps.etl(s2)
+      old.fact.count()
+      // the frames that read the OLTP corpus (dim_date and dim_time are
+      // calendar grids whose plans the rebuilt entry re-caches unchanged)
+      val oldFrames = old.fact +: Seq("dim_route", "dim_customer", "dim_vehicle",
+        "dim_driver").map(old.dims)
+      assert(oldFrames.forall(_.storageLevel.useMemory))
+
+      val dir = tempDir("fleetops-reconfigure")
+      FleetOps.reconfigure(DataGen.Config(seed = 7, nTrips = 2000), Some(dir))
+      val trips = FleetOps.oltp(s2).trips
+      assert(trips.inputFiles.nonEmpty && trips.inputFiles.forall(_.contains(dir)))
+      assert(trips.count() === 2000)
+
+      val fresh = FleetOps.etl(s2)
+      assert(!(fresh eq old))
+      assert(fresh.fact.storageLevel.useMemory)
+      assert(oldFrames.forall(_.storageLevel === StorageLevel.NONE),
+        "the displaced ETL entry must release its cached frames")
+      assert(SessionMemo.entries(s2).keySet === Set("fleet_oltp", "fleet_etl"))
+    } finally {
+      FleetOps.reconfigure(DataGen.Config())
+      SessionMemo.evict(s2)
+    }
   }
 }

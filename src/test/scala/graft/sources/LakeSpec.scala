@@ -6,7 +6,7 @@ import graft.{GraftSpec, Tables}
 class LakeSpec extends GraftSpec {
 
   test("partitioned layout prunes directories on the partition filter") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_lake").toString + "/orders"
+    val dir = tempDir("graft_lake") + "/orders"
     val orders = Tables.orders(spark, sf("sf0.001"))
       .withColumn("order_year", year(col("o_orderdate")))
     Lake.writePartitioned(orders, dir, Seq("order_year"))
@@ -101,7 +101,7 @@ class LakeSpec extends GraftSpec {
   }
 
   test("sorted layout produces row-group-skippable files") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sorted").toString + "/li"
+    val dir = tempDir("graft_sorted") + "/li"
     Lake.writeSorted(Tables.lineitem(spark, sf("sf0.001")), dir, Seq("l_shipdate"))
     val df = spark.read.parquet(dir).filter(col("l_quantity") > 45)
     assert(df.queryExecution.executedPlan.toString.contains("PushedFilters"))
@@ -110,7 +110,7 @@ class LakeSpec extends GraftSpec {
 
   test("compaction collapses small files, preserves content, keeps sort skipping") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact").toString + "/t"
+    val dir = tempDir("graft_compact") + "/t"
     val df = spark.range(2000).select($"id", ($"id" % 7).as("k"))
     df.repartition(20).write.mode("overwrite").parquet(dir)
     def parquetFiles = new java.io.File(dir).listFiles()
@@ -145,7 +145,7 @@ class LakeSpec extends GraftSpec {
 
   test("compact refuses a Hive-partitioned layout") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact_p").toString + "/t"
+    val dir = tempDir("graft_compact_p") + "/t"
     spark.range(100).select($"id", ($"id" % 3).as("p"))
       .write.mode("overwrite").partitionBy("p").parquet(dir)
     val e = intercept[IllegalArgumentException] {

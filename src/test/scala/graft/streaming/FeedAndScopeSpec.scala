@@ -10,63 +10,47 @@ class FeedAndScopeSpec extends GraftSpec {
   import spark.implicits._
 
   test("FileFeed staging: identical batch plans reuse bytes, different plans never cross") {
-    val dir = java.nio.file.Files.createTempDirectory("feedspec_")
+    val dir = tempDir("feedspec_")
+    val src = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v")
+    src.write.mode("overwrite").parquet(s"$dir/t")
+    val t = spark.read.parquet(s"$dir/t")
+    val feed = new FileFeed(spark)
     try {
-      val src = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v")
-      src.write.mode("overwrite").parquet(s"$dir/t")
-      val t = spark.read.parquet(s"$dir/t")
-      val feed = new FileFeed(spark)
-      try {
-        // two drops of the SAME logical batch (staging reuse path) and
-        // one of a DIFFERENT batch — the watched dir must contain three
-        // files whose contents are batch1, batch1, batch2
-        val b1 = t.filter($"id" <= 2)
-        val b2 = t.filter($"id" === 3)
-        feed.drop(b1); feed.drop(b1); feed.drop(b2)
-        val stream = feed.source(t.schema)
-        val q = stream.writeStream.format("memory").queryName("feedspec")
-          .option("checkpointLocation",
-            java.nio.file.Files.createTempDirectory("feedspec_ck_").toString)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-        val got = spark.table("feedspec").as[(Long, String)].collect().sorted
-        assert(got.toSeq === Seq((1L, "a"), (1L, "a"), (2L, "b"),
-          (2L, "b"), (3L, "c")))
-      } finally feed.close()
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(dir.toFile)
-    }
+      // two drops of the SAME logical batch (staging reuse path) and
+      // one of a DIFFERENT batch — the watched dir must contain three
+      // files whose contents are batch1, batch1, batch2
+      val b1 = t.filter($"id" <= 2)
+      val b2 = t.filter($"id" === 3)
+      feed.drop(b1); feed.drop(b1); feed.drop(b2)
+      val stream = feed.source(t.schema)
+      val q = stream.writeStream.format("memory").queryName("feedspec")
+        .option("checkpointLocation", tempDir("feedspec_ck_"))
+        .outputMode("append").start()
+      try q.processAllAvailable() finally q.stop()
+      val got = spark.table("feedspec").as[(Long, String)].collect().sorted
+      assert(got.toSeq === Seq((1L, "a"), (1L, "a"), (2L, "b"),
+        (2L, "b"), (3L, "c")))
+    } finally feed.close()
   }
 
   test("FileFeed staging keys on the plan, not the schema alone") {
-    val dir = java.nio.file.Files.createTempDirectory("feedspec2_")
+    val dir = tempDir("feedspec2_")
+    Seq((10L, "x"), (20L, "y")).toDF("id", "v")
+      .write.mode("overwrite").parquet(s"$dir/t")
+    val t = spark.read.parquet(s"$dir/t")
+    val feed = new FileFeed(spark)
     try {
-      Seq((10L, "x"), (20L, "y")).toDF("id", "v")
-        .write.mode("overwrite").parquet(s"$dir/t")
-      val t = spark.read.parquet(s"$dir/t")
-      val feed = new FileFeed(spark)
-      try {
-        // same schema, different filter literals — must stage separately
-        feed.drop(t.filter($"id" === 10))
-        feed.drop(t.filter($"id" === 20))
-        val stream = feed.source(t.schema)
-        val q = stream.writeStream.format("memory").queryName("feedspec2")
-          .option("checkpointLocation",
-            java.nio.file.Files.createTempDirectory("feedspec2_ck_").toString)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-        val got = spark.table("feedspec2").as[(Long, String)].collect().sorted
-        assert(got.toSeq === Seq((10L, "x"), (20L, "y")))
-      } finally feed.close()
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(dir.toFile)
-    }
+      // same schema, different filter literals — must stage separately
+      feed.drop(t.filter($"id" === 10))
+      feed.drop(t.filter($"id" === 20))
+      val stream = feed.source(t.schema)
+      val q = stream.writeStream.format("memory").queryName("feedspec2")
+        .option("checkpointLocation", tempDir("feedspec2_ck_"))
+        .outputMode("append").start()
+      try q.processAllAvailable() finally q.stop()
+      val got = spark.table("feedspec2").as[(Long, String)].collect().sorted
+      assert(got.toSeq === Seq((10L, "x"), (20L, "y")))
+    } finally feed.close()
   }
 
   test("IterScope restores confs on success and on exception; width is conf-driven") {

@@ -49,7 +49,7 @@ class StreamsSpec extends GraftSpec {
     // This test writes BOTH physical formats, reads each through the
     // SAME loader the gates use (Tables.events), and drives a real
     // file-source streaming query off the NTZ files.
-    val base = java.nio.file.Files.createTempDirectory("ntz_events").toString
+    val base = tempDir("ntz_events")
 
     // (a) the new driver format: TIMESTAMP_NTZ microseconds
     val ntzDir = s"$base/ntz"
@@ -288,8 +288,8 @@ class StreamsSpec extends GraftSpec {
 
   test("keyed parquet upsert sink: last-write-wins snapshot across batches") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_upsert").toString + "/state"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    val dir = tempDir("graft_upsert") + "/state"
+    val ckpt = tempDir("graft_ckpt")
     val mem = MemoryStream[Streams.GpsEvent]
     val q = graft.streaming.KeyedParquetSink.start(
       mem.toDS(), dir, ckpt, Seq("vehicle_id"), "ts")
@@ -373,7 +373,7 @@ class StreamsSpec extends GraftSpec {
     import spark.implicits._
     // recovery needs a FAULT-TOLERANT sink (the memory sink refuses a
     // used checkpoint) — a parquet file sink is the production shape
-    val base = java.nio.file.Files.createTempDirectory("graft_restart").toString
+    val base = tempDir("graft_restart")
     val (ck, out) = (s"$base/ck", s"$base/out")
     val mem = MemoryStream[Streams.StreamDoc]
     def start() = Streams.streamingExactDedup(mem.toDS()).toDF()
@@ -400,10 +400,6 @@ class StreamsSpec extends GraftSpec {
     val ids = spark.read.parquet(out)
       .as[Streams.StreamDoc].collect().map(_.doc_id)
     assert(ids.toSet === Set(1L, 2L, 4L), s"got ${ids.toSeq}")
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-    }
-    rm(new java.io.File(base))
   }
 
   test("stream-static enrich: dim joined per micro-batch, left semantics keep unmatched facts") {
@@ -437,14 +433,14 @@ class StreamsSpec extends GraftSpec {
       Map("source" -> "rate-micro-batch", "rowsPerBatch" -> "50"))
     assert(src.isStreaming)
     assert(src.schema.fieldNames.toSet === Set("timestamp", "value"))
-    val ck = java.nio.file.Files.createTempDirectory("graft_rate_ck_")
+    val ck = tempDir("graft_rate_ck_")
     // a 5 s trigger leaves a wide idle window between micro-batches, so
     // the finally-stop lands while no commit is in flight — stopping a
     // default-trigger rate query mid-commit aborts the epoch and dumps
     // CANNOT_COMMIT state-store ERROR traces into an otherwise clean log
     val q = src.groupBy().count()
       .writeStream.format("memory").queryName("rate_smoke_sink")
-      .option("checkpointLocation", ck.toString)
+      .option("checkpointLocation", ck)
       .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("5 seconds"))
       .outputMode("complete").start()
     try {
@@ -462,9 +458,9 @@ class StreamsSpec extends GraftSpec {
 
   test("StreamSource: file reader is the FileFeed shape; kafka needs the connector artifact") {
     // file: same watched-directory parquet source the gates run on
-    val dir = java.nio.file.Files.createTempDirectory("graft_src_probe_")
+    val dir = tempDir("graft_src_probe_")
     val fileSrc = StreamSource.reader(spark,
-      Map("source" -> "file", "path" -> dir.toString),
+      Map("source" -> "file", "path" -> dir),
       schema = Some(org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("x",
           org.apache.spark.sql.types.LongType)))))
