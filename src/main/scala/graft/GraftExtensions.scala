@@ -1,53 +1,21 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 import graft.functions.{FloatVecDot, FnvHash64, MisraGries, NfcNormalize, TopKStruct}
 
 /** SparkSessionExtensions entry point: wires the engine's native
   * Catalyst expressions into any session built with
   * `.config("spark.sql.extensions", "graft.GraftExtensions")` — the
-  * deployment-grade alternative to per-session
-  * `FnvHash64.register(spark)` calls (SURVEY §7.3: extensions are the
-  * sanctioned injection point; no session-state mutation after build).
+  * deployment-grade alternative to registering each function on first
+  * use (SURVEY §7.3: extensions are the sanctioned injection point; no
+  * session-state mutation after build). Each function's builder is the
+  * one its column form registers in sessions built without extensions.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    // the custom-operator tier (SURVEY §7.3 (c)): the native as-of
-    // join's planner strategy (AsOfJoinNode → AsOfJoinExec) and the
-    // optimizer rule that lets left-side filters push through the
-    // otherwise-opaque custom node (runs inside the operator-
-    // optimization fixed point, so built-in rules cascade the pushed
-    // filter down to the scan)
-    ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
-    ext.injectOptimizerRule(_ => graft.plans.AsOfJoinFilterPushdown)
-    ext.injectFunction((
-      FunctionIdentifier("fnv64"),
-      new ExpressionInfo(classOf[FnvHash64].getName, "fnv64"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        FnvHash64(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("fdot"),
-      new ExpressionInfo(classOf[FloatVecDot].getName, "fdot"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        FloatVecDot(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("topk_struct"),
-      new ExpressionInfo(classOf[TopKStruct].getName, "topk_struct"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        TopKStruct.fromExprs(exprs).toAggregateExpression()))
-    ext.injectFunction((
-      FunctionIdentifier("nfc"),
-      new ExpressionInfo(classOf[NfcNormalize].getName, "nfc"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        NfcNormalize(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("misra_gries"),
-      new ExpressionInfo(classOf[MisraGries].getName, "misra_gries"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        MisraGries.fromExprs(exprs).toAggregateExpression()))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    Seq(FnvHash64.function, FloatVecDot.function, TopKStruct.function,
+      NfcNormalize.function, MisraGries.function)
+      .foreach(f => ext.injectFunction(f.description))
 }

@@ -94,11 +94,10 @@ object ScaleBench {
     // skew-salted join (shuffle ∝ fact + salts×dim) and HLL sketch
     // rollup (one mergeable day pass + day-count-sized unions)
     "q97_skew_salted_join", "q98_hll_rollup",
-    // the as-of twins as a measured PAIR: union+window rewrite vs the
-    // native AsOfJoinExec merge — same shuffles, window frame buffer
-    // vs O(1) merge state; plus incremental-MV maintenance (two aggs
-    // + one MV-sized merge join)
-    "q21_asof_join", "q21b_asof_join_native", "q99_incremental_mv",
+    // the as-of join (union + running window: one shuffle per side)
+    // and incremental-MV maintenance (two aggs + one MV-sized merge
+    // join)
+    "q21_asof_join", "q99_incremental_mv",
     // SES forecast: daily agg + calendar-bounded per-user windows
     "q101_exp_smoothing",
     // behavioral analytics (r8): funnel = 3 filtered aggs + 2

@@ -84,22 +84,9 @@ case class FloatVecDot(left: Expression, right: Expression) extends BinaryExpres
 
 object FloatVecDot {
 
-  /** Register `fdot` in the session's function registry. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "fdot", (exprs: Seq[Expression]) => {
-        if (exprs.length != 2)
-          throw new org.apache.spark.sql.AnalysisException(
-            errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-            messageParameters = Map(
-              "functionName" -> "fdot", "expectedNum" -> "2",
-              "actualNum" -> exprs.length.toString, "legacyNum" -> "2"))
-        FloatVecDot(exprs.head, exprs(1))
-      }, "built-in")
+  /** SQL `fdot(a, b)`. */
+  val function = new NativeFunction("fdot", classOf[FloatVecDot], 2)(
+    exprs => FloatVecDot(exprs.head, exprs(1)))
 
-  /** Column form (registers `fdot` in the session first, idempotent). */
-  def dot(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function("fdot", a, b)
-  }
+  def dot(spark: SparkSession, a: Column, b: Column): Column = function(spark, a, b)
 }

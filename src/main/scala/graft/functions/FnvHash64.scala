@@ -47,15 +47,10 @@ object FnvHash64 {
     h
   }
 
-  /** Register `fnv64` in the session's function registry so both SQL
-    * text and `expr("fnv64(...)")` resolve it. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "fnv64", (exprs: Seq[Expression]) => FnvHash64(exprs.head), "built-in")
+  /** SQL `fnv64(s)`. */
+  val function = new NativeFunction("fnv64", classOf[FnvHash64], 1)(
+    exprs => FnvHash64(exprs.head))
 
-  /** Column form (registers `fnv64` in the session first, idempotent). */
-  def column(spark: SparkSession, c: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function("fnv64", c)
-  }
+  def column(spark: SparkSession, c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    function(spark, c)
 }

@@ -150,28 +150,16 @@ case class MisraGries(
 
 object MisraGries {
 
-  /** Builder for registry injection: `misra_gries(item, k)`. */
-  def fromExprs(exprs: Seq[Expression]): MisraGries = {
-    require(exprs.length == 2,
-      s"misra_gries expects 2 arguments (item, k), got ${exprs.length}")
+  /** SQL `misra_gries(item, k)`, `k` an integer literal. */
+  val function = new NativeFunction("misra_gries", classOf[MisraGries], 2)({ exprs =>
     val k = exprs(1) match {
       case Literal(v: Int, IntegerType) => v
       case other => throw new IllegalArgumentException(
         s"misra_gries: k must be an integer literal, got $other")
     }
-    MisraGries(exprs.head, k)
-  }
+    MisraGries(exprs.head, k).toAggregateExpression()
+  })
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "misra_gries",
-      (exprs: Seq[Expression]) => fromExprs(exprs).toAggregateExpression(),
-      "built-in")
-
-  /** Column form (registers `misra_gries` in the session, idempotent). */
-  def sketch(spark: SparkSession, item: Column, k: Int): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function(
-      "misra_gries", item, org.apache.spark.sql.functions.lit(k))
-  }
+  def sketch(spark: SparkSession, item: Column, k: Int): Column =
+    function(spark, item, org.apache.spark.sql.functions.lit(k))
 }

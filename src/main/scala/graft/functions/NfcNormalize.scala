@@ -50,15 +50,10 @@ object NfcNormalize {
     if (java.text.Normalizer.isNormalized(s, java.text.Normalizer.Form.NFC)) s
     else java.text.Normalizer.normalize(s, java.text.Normalizer.Form.NFC)
 
-  /** Register `nfc` in the session's function registry so both SQL
-    * text and `expr("nfc(...)")` resolve it. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nfc", (exprs: Seq[Expression]) => NfcNormalize(exprs.head), "built-in")
+  /** SQL `nfc(s)`. */
+  val function = new NativeFunction("nfc", classOf[NfcNormalize], 1)(
+    exprs => NfcNormalize(exprs.head))
 
-  /** Column form (registers `nfc` in the session first, idempotent). */
-  def column(spark: SparkSession, c: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function("nfc", c)
-  }
+  def column(spark: SparkSession, c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    function(spark, c)
 }

@@ -143,26 +143,17 @@ case class TopKStruct(
 
 object TopKStruct {
 
-  /** Builder for registry injection: `topk_struct(score, item, k)` with
-    * `k` a foldable integer literal. */
-  def fromExprs(exprs: Seq[Expression]): TopKStruct = {
-    require(exprs.length == 3,
-      s"topk_struct expects 3 arguments (score, item, k), got ${exprs.length}")
+  /** SQL `topk_struct(score, item, k)`, `k` an integer literal. */
+  val function = new NativeFunction("topk_struct", classOf[TopKStruct], 3)({ exprs =>
     val k = exprs(2) match {
       case Literal(v: Int, IntegerType) => v
       case other => throw new IllegalArgumentException(
         s"topk_struct: k must be an integer literal, got $other")
     }
-    TopKStruct(exprs.head, exprs(1), k)
-  }
+    TopKStruct(exprs.head, exprs(1), k).toAggregateExpression()
+  })
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "topk_struct",
-      (exprs: Seq[Expression]) => fromExprs(exprs).toAggregateExpression(),
-      "built-in")
-
-  /** Column form (registers `topk_struct` in the session, idempotent).
+  /** Column form.
     *
     * Leave `spark.sql.objectHashAggregate.sortBased.fallbackThreshold`
     * at its default. Measured on the 500k-doc / 30M-token q64 curve
@@ -175,9 +166,6 @@ object TopKStruct {
     * at 4M, slower at 1M + pre-repartition because the exchange then
     * carries the full input instead of the combined ≤ k-per-group
     * partials). */
-  def topk(spark: SparkSession, score: Column, item: Column, k: Int): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function(
-      "topk_struct", score, item, org.apache.spark.sql.functions.lit(k))
-  }
+  def topk(spark: SparkSession, score: Column, item: Column, k: Int): Column =
+    function(spark, score, item, org.apache.spark.sql.functions.lit(k))
 }

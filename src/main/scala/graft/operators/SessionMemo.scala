@@ -44,8 +44,16 @@ private[graft] object SessionMemo {
 
   private val hooked = ConcurrentHashMap.newKeySet[SparkContext]()
 
-  private def release(dfs: Seq[DataFrame]): Unit =
-    dfs.foreach(df => scala.util.Try(df.unpersist(blocking = false)))
+  /** Unpersists `dfs`, whose entry has already left the map, except a
+    * frame whose plan gives the same result as one another live entry
+    * pins: CacheManager is per SparkContext and matches entries by plan,
+    * so unpersisting it would uncache that entry's frame too. */
+  private def release(dfs: Seq[DataFrame]): Unit = {
+    val live = sessions.values.asScala.flatMap(_.values.asScala).flatMap(_.pinned).toSeq
+    dfs.filterNot(df => live.exists(p =>
+      (p.sparkSession.sparkContext eq df.sparkSession.sparkContext) && p.sameSemantics(df)))
+      .foreach(df => scala.util.Try(df.unpersist(blocking = false)))
+  }
 
   private def families(s: SparkSession): ConcurrentHashMap[String, Entry] = {
     val sc = s.sparkContext

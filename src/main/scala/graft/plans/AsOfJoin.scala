@@ -22,6 +22,14 @@ import org.apache.spark.sql.functions._
   * the cross product. Right-side payload is packed in a struct so
   * `last(_, ignoreNulls=true)` carries forward the whole latest right
   * row (including its legitimately-null fields).
+  *
+  * Nulls follow SQL `=` / `<=`: a null key or null time matches
+  * nothing. Right rows with a null key or a null `rightTime` are
+  * dropped before the union; otherwise the window would group a null
+  * left key with null right keys, and a null right time (sorting first)
+  * would be carried forward to every later left row of its key. Left
+  * rows with a null key or time keep null payloads, as no right row can
+  * precede them.
   */
 object AsOfJoin {
 
@@ -56,6 +64,7 @@ object AsOfJoin {
         lit(null).cast(right.select(rightCols.map(col): _*).schema))
 
     val r = right
+      .filter((keys :+ rightTime).map(col(_).isNotNull).reduce(_ && _))
       .withColumn(t, col(rightTime))
       .withColumn(side, lit(0))
       .withColumn(tb, tieBreak.map(col(_).cast("long")).getOrElse(lit(0L)))

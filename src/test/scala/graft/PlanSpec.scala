@@ -364,7 +364,7 @@ class PlanSpec extends GraftSpec {
     both.collect()
     assert(both.queryExecution.executedPlan.toString.contains("*("))
     // SQL-registry path resolves too
-    FloatVecDot.register(spark)
+    FloatVecDot.function.register(spark)
     emb.createOrReplaceTempView("fdot_probe")
     assert(spark.sql("SELECT fdot(embedding, embedding) FROM fdot_probe").count() === 50)
     emb.unpersist()
@@ -384,8 +384,34 @@ class PlanSpec extends GraftSpec {
     assert(r.getAs[String]("n") === "\u00e9")
   }
 
+  test("native functions register once: a second dot call keeps the builder") {
+    import graft.functions.FloatVecDot
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val id = FunctionIdentifier("fdot")
+    val v = array(lit(1.0f), lit(2.0f))
+    // a session whose registry lacks fdot, as one built without extensions
+    val s = spark.newSession()
+    val registry = s.sessionState.functionRegistry
+    registry.dropFunction(id)
+    assert(!registry.functionExists(id))
+    FloatVecDot.dot(s, v, v)
+    val first = registry.lookupFunctionBuilder(id)
+    assert(first.isDefined, "the column form registers a missing function")
+    FloatVecDot.dot(s, v, v)
+    assert(registry.lookupFunctionBuilder(id).get eq first.get)
+    assert(s.range(1).select(FloatVecDot.dot(s, v, v)).head().getDouble(0) === 5.0)
+    // the extensions-built session keeps its injected builder too
+    val injected = spark.sessionState.functionRegistry.lookupFunctionBuilder(id).get
+    FloatVecDot.dot(spark, v, v)
+    assert(spark.sessionState.functionRegistry.lookupFunctionBuilder(id).get eq injected)
+    // the shared builder checks its arity
+    val err = intercept[org.apache.spark.sql.AnalysisException](
+      spark.sql("SELECT fdot(array(CAST(1.0 AS FLOAT)))").collect())
+    assert(err.getMessage.contains("WRONG_NUM_ARGS"), err.getMessage)
+  }
+
   test("fnv64 native expression: codegen'd, SQL-callable, matches the kernel hash") {
-    FnvHash64.register(spark)
+    FnvHash64.function.register(spark)
     import spark.implicits._
     val df = Seq("hello world", "", "graft a\u00f1ejo ☕").toDF("s")
     df.createOrReplaceTempView("fnv_probe")

@@ -27,18 +27,30 @@ object OperatorProps extends Properties("operators") {
       t <- Gen.choose(0L, 1000L)
     } yield (k, ts0 + t * 60000))
 
+  /** As-of rows: keys include negatives, and either column may be null. */
+  private val genAsOfEvents: Gen[List[(Option[Long], Option[java.sql.Timestamp])]] =
+    Gen.listOfN(30, for {
+      k <- Gen.frequency(1 -> Gen.const(None), 6 -> Gen.choose(-2L, 3L).map(Some(_)))
+      t <- Gen.frequency(1 -> Gen.const(None),
+        6 -> Gen.choose(0L, 1000L).map(t => Some(new java.sql.Timestamp(ts0 + t * 60000))))
+    } yield (k, t))
+
   property("asOfJoin == naive latest-at-or-before lookup") =
-    forAll(genEvents, genEvents) { (leftRaw, rightRaw) =>
-      val left = leftRaw.zipWithIndex.map { case ((k, t), i) => (i.toLong, k, new java.sql.Timestamp(t)) }
-      val right = rightRaw.zipWithIndex.map { case ((k, t), i) => (i.toLong, k, new java.sql.Timestamp(t)) }
+    forAll(genAsOfEvents, genAsOfEvents) { (leftRaw, rightRaw) =>
+      val left = leftRaw.zipWithIndex.map { case ((k, t), i) => (i.toLong, k, t) }
+      val right = rightRaw.zipWithIndex.map { case ((k, t), i) => (i.toLong, k, t) }
       val lDf = left.toDF("lid", "k", "t")
       val rDf = right.toDF("rid", "k", "rt")
       val got = AsOfJoin(lDf, rDf, Seq("k"), "t", "rt", Seq("rid"), tieBreak = Some("rid"))
         .select($"lid", $"rid").as[(Long, Option[Long])].collect().toMap
+      // SQL `=` / `<=`: a null key or time on either side never matches
       left.forall { case (lid, k, t) =>
-        val candidates = right.filter { case (_, rk, rt) => rk == k && !rt.after(t) }
+        val candidates = right.collect {
+          case (rid, Some(rk), Some(rt)) if k.contains(rk) && t.exists(!rt.after(_)) =>
+            (rid, rt)
+        }
         val expect = if (candidates.isEmpty) None
-          else Some(candidates.maxBy(r => (r._3.getTime, r._1))._1)
+          else Some(candidates.maxBy { case (rid, rt) => (rt.getTime, rid) }._1)
         got(lid) == expect
       }
     }

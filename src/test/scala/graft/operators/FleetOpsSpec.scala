@@ -70,33 +70,47 @@ class FleetOpsSpec extends GraftSpec {
   }
 
   test("evict releases the 2-day gate's persisted blocks for that session") {
+    // a corpus of its own: eviction keeps a frame cached while another
+    // session's live entry pins the same plan (CacheManager matches by
+    // plan), and the suite session pins the default corpus's frames
+    FleetOps.reconfigure(DataGen.Config(seed = 7, nTrips = 2000),
+      Some(tempDir("fleetops-evict")))
     val s2 = spark.newSession()
-    // build ONE persisted 2-day input family (staging snapshots + day-1
-    // dim) — the cheapest path that persists blocks for s2; the full
-    // warmup would rebuild every gate input for a second session
-    FleetOps.scd2TwoDay(s2, Dimensions.dimVehicle,
-      "vehicle_id", Dimensions.vehicleTracked, "vehicle_sk").count()
-    assert(SessionMemo.entries(s2).keySet === Set("fleet_oltp", "fleet_scd2_2day|vehicle_sk"))
-    val cachedBefore = spark.sparkContext.getPersistentRDDs.size
-    assert(cachedBefore > 0) // warmup persisted something on the shared context
+    try {
+      // build ONE persisted 2-day input family (staging snapshots + day-1
+      // dim) — the cheapest path that persists blocks for s2; the full
+      // warmup would rebuild every gate input for a second session
+      FleetOps.scd2TwoDay(s2, Dimensions.dimVehicle,
+        "vehicle_id", Dimensions.vehicleTracked, "vehicle_sk").count()
+      assert(SessionMemo.entries(s2).keySet === Set("fleet_oltp", "fleet_scd2_2day|vehicle_sk"))
+      val cachedBefore = spark.sparkContext.getPersistentRDDs.size
+      assert(cachedBefore > 0)
 
-    SessionMemo.evict(s2)
-    assert(SessionMemo.entries(s2).isEmpty)
-    // unpersist(blocking = false) is async — poll briefly for the drop
-    val deadline = System.nanoTime() + 10e9.toLong
-    var after = spark.sparkContext.getPersistentRDDs.size
-    while (after >= cachedBefore && System.nanoTime() < deadline) {
-      Thread.sleep(100)
-      after = spark.sparkContext.getPersistentRDDs.size
+      SessionMemo.evict(s2)
+      assert(SessionMemo.entries(s2).isEmpty)
+      // unpersist(blocking = false) is async — poll briefly for the drop
+      val deadline = System.nanoTime() + 10e9.toLong
+      var after = spark.sparkContext.getPersistentRDDs.size
+      while (after >= cachedBefore && System.nanoTime() < deadline) {
+        Thread.sleep(100)
+        after = spark.sparkContext.getPersistentRDDs.size
+      }
+      assert(after < cachedBefore,
+        s"expected persisted RDD count to drop below $cachedBefore, still $after")
+    } finally {
+      FleetOps.reconfigure(DataGen.Config())
+      SessionMemo.evict(s2)
     }
-    assert(after < cachedBefore,
-      s"expected persisted RDD count to drop below $cachedBefore, still $after")
   }
 
   test("reconfigure serves no stale corpus: the next use rebuilds on the new dir") {
     import org.apache.spark.storage.StorageLevel
     val s2 = spark.newSession()
     try {
+      // start on a corpus of its own, so no other session's live entry
+      // pins the frames the displacement must release
+      FleetOps.reconfigure(DataGen.Config(seed = 5, nTrips = 2000),
+        Some(tempDir("fleetops-reconfigure-old")))
       val old = FleetOps.etl(s2)
       old.fact.count()
       // the frames that read the OLTP corpus (dim_date and dim_time are

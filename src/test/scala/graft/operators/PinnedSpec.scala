@@ -105,6 +105,24 @@ class PinnedSpec extends GraftSpec {
     assert(!(a eq b), "swap must hand back the fresh frames, not memoize")
   }
 
+  test("memo: evicting one session keeps a sibling's frame of the same plan cached") {
+    // CacheManager is per SparkContext and matches by plan: both sessions'
+    // entries share one cache entry, which the eviction must not drop
+    val (s1, s2) = (spark.newSession(), spark.newSession())
+    try {
+      def kernel(s: SparkSession)(pin: DataFrame => DataFrame) =
+        pin(s.range(64).select((col("id") % 5).as("k")).groupBy("k").count())
+      val a = SessionMemo.memo(s1, "pinnedspec_shared", "dir")(kernel(s1))
+      val b = SessionMemo.memo(s2, "pinnedspec_shared", "dir")(kernel(s2))
+      assert(a.sameSemantics(b) && b.storageLevel.useMemory)
+      SessionMemo.evict(s1)
+      assert(b.storageLevel.useMemory, "the sibling's frame must stay cached")
+      assert(b.count() === 5)
+      SessionMemo.evict(s2)
+      assert(!b.storageLevel.useMemory, "the last entry's eviction releases it")
+    } finally { SessionMemo.evict(s1); SessionMemo.evict(s2) }
+  }
+
   test("memo: each family keeps one entry per session across corpus switches") {
     val (s1, s2) = (spark.newSession(), spark.newSession())
     try {

@@ -3,14 +3,13 @@ package graft.plans
 import org.apache.spark.sql.functions._
 import graft.GraftSpec
 
-/** The native as-of physical operator (AsOfJoinNode → AsOfJoinExec):
-  * result equality with the union+window rewrite on shipped data AND
-  * on adversarial fixtures, plan-shape proof, and a randomized
-  * cross-check against a naive per-row reference. */
+/** q21b (`q21b_asof_join_native`) and the fixtures that once checked a
+  * separate native as-of operator. q21b now runs q21's `AsOfJoin` body,
+  * so these cases run on `AsOfJoin`: row equality with q21, null-key
+  * lefts beside negative keys on one partition, and randomized
+  * cross-checks against a naive per-row reference. */
 class AsOfNativeSpec extends GraftSpec {
   import spark.implicits._
-
-  private def ts(s: String) = java.sql.Timestamp.valueOf(s)
 
   test("native as-of == union+window as-of on the shipped events (q21 twin)") {
     val dir = sf("sf0.001")
@@ -20,53 +19,9 @@ class AsOfNativeSpec extends GraftSpec {
     assert(rows("q21b_asof_join_native") === rows("q21_asof_join"))
   }
 
-  test("native as-of plans AsOfJoinExec with exchanges+sorts, no window, no nested loop") {
-    val dir = sf("sf0.001")
-    val p = graft.SparkEntry.queries("q21b_asof_join_native")(spark, dir)
-      .queryExecution.executedPlan.toString
-    assert(p.contains("AsOfJoin ["), p.linesIterator.take(30).mkString("\n"))
-    assert(!p.contains("Window") && !p.contains("BroadcastNestedLoop") &&
-      !p.contains("CartesianProduct"))
-    // both sides hash-cluster on the key and sort per the operator's
-    // requiredChildOrdering; pushdown + pruning survive the custom node
-    assert("Exchange hashpartitioning\\(user_id".r.findAllIn(p).size === 2, p)
-    assert(p.contains("PushedFilters: [IsNotNull(event_type)"))
-  }
-
-  test("adversarial semantics: null keys, null times, unmatched lefts, equal-ts ties") {
-    val left = Seq(
-      (Some(1L), Some(ts("2024-01-01 10:00:00"))), // plain match
-      (Some(1L), Some(ts("2024-01-01 08:00:00"))), // before any right → null
-      (Some(1L), None),                            // null left time → null
-      (None, Some(ts("2024-01-01 10:00:00"))),     // null left key → null
-      (Some(3L), Some(ts("2024-01-01 10:00:00"))) // key with no rights → null
-    ).toDF("k", "t")
-    val right = Seq(
-      (Some(1L), Some(ts("2024-01-01 09:00:00")), 1L, "a"),
-      (Some(1L), Some(ts("2024-01-01 09:00:00")), 2L, "b"), // tie → b
-      (None, Some(ts("2024-01-01 08:00:00")), 3L, "nullkey"),
-      (Some(2L), None, 4L, "nullts")
-    ).toDF("k", "rt", "seq", "v")
-    val out = AsOfJoinNative(left, right, Seq("k"), "t", "rt", Some("seq"))
-      .orderBy($"k", $"t")
-      .collect()
-      .map(r => (Option(r.get(0)), Option(r.get(1)).map(_.toString),
-        Option(r.getAs[String]("v"))))
-    // orderBy (k asc nulls first, t asc nulls first)
-    assert(out.map(_._3) === Seq(
-      None,        // null key
-      None,        // k=1, null time
-      None,        // k=1, 08:00
-      Some("b"),   // k=1, 10:00 — tie-break picks seq=2
-      None         // k=3 unmatched
-    ))
-  }
-
   test("null-key lefts consume no right rows: negative keys still match (fast path)") {
-    // Nulls-first left ordering puts the null-key row BEFORE key -5; a
-    // merge that compared against stale/zero key slots would consume
-    // (ck<0) and silently drop the -5 right row before its real left
-    // row arrives. Single partition to force one merged stream.
+    // Nulls-first left ordering puts the null-key row before key -5 in
+    // one partition; the -5 right row must still reach its own left row.
     val left = Seq(
       (Option.empty[Long], Some(100L), 1L),
       (Some(-5L), Some(100L), 2L),
@@ -76,29 +31,10 @@ class AsOfNativeSpec extends GraftSpec {
       (Some(-5L), Some(50L), "neg"),
       (Some(7L), Some(50L), "pos")
     ).toDF("k", "rt", "v").coalesce(1)
-    val out = AsOfJoinNative(left, right, Seq("k"), "t", "rt")
+    val out = AsOfJoin(left, right, Seq("k"), "t", "rt", Seq("v"))
       .orderBy($"lid")
       .collect().map(r => Option(r.getAs[String]("v")))
     assert(out.toSeq === Seq(None, Some("neg"), Some("pos")))
-  }
-
-  test("null-key lefts with string keys: generic path emits unmatched, no NPE") {
-    // string keys are not long-physical → generic interpreted-ordering
-    // path; before the guard, cmpKeysRL passed the null slot into
-    // UTF8String.compareTo and crashed.
-    val left = Seq(
-      (Option.empty[String], Some(100L), 1L),
-      (Some("a"), Some(100L), 2L),
-      (Some("zz"), Some(100L), 3L)
-    ).toDF("k", "t", "lid").coalesce(1)
-    val right = Seq(
-      (Some("a"), Some(50L), "first"),
-      (Some("zz"), Some(60L), "last")
-    ).toDF("k", "rt", "v").coalesce(1)
-    val out = AsOfJoinNative(left, right, Seq("k"), "t", "rt")
-      .orderBy($"lid")
-      .collect().map(r => Option(r.getAs[String]("v")))
-    assert(out.toSeq === Seq(None, Some("first"), Some("last")))
   }
 
   test("randomized with null/negative keys: native == naive reference (fast + generic)") {
@@ -113,23 +49,17 @@ class AsOfNativeSpec extends GraftSpec {
       val cands = rrows.filter(r => k.isDefined && r._2 == k && r._3 <= t)
       lid -> (if (cands.isEmpty) None else Some(cands.maxBy(r => (r._3, r._1))._1))
     }.toMap
-    // fast path (long keys)
-    val gotFast = AsOfJoinNative(
-      lrows.toDF("lid", "k", "t").repartition(5),
-      rrows.toDF("rid", "k", "rt").repartition(3),
-      Seq("k"), "t", "rt", Some("rid"))
-      .select($"lid", $"rid").collect()
-      .map(r => r.getLong(0) -> Option(r.get(1)).map(_.asInstanceOf[Long])).toMap
-    assert(gotFast === want)
-    // generic path (string-ified keys preserve order via sign+padding)
+    def run(l: org.apache.spark.sql.DataFrame, r: org.apache.spark.sql.DataFrame) =
+      AsOfJoin(l.repartition(5), r.repartition(3), Seq("k"), "t", "rt", Seq("rid"), Some("rid"))
+        .select($"lid", $"rid").collect()
+        .map(row => row.getLong(0) -> Option(row.get(1)).map(_.asInstanceOf[Long])).toMap
+    // long keys
+    assert(run(lrows.toDF("lid", "k", "t"), rrows.toDF("rid", "k", "rt")) === want)
+    // string keys (sign+padding keeps their order)
     def sk(k: Option[Long]): Option[String] = k.map(v => f"${v + 100}%03d")
-    val gotGen = AsOfJoinNative(
-      lrows.map { case (lid, k, t) => (lid, sk(k), t) }.toDF("lid", "k", "t").repartition(5),
-      rrows.map { case (rid, k, t) => (rid, sk(k), t) }.toDF("rid", "k", "rt").repartition(3),
-      Seq("k"), "t", "rt", Some("rid"))
-      .select($"lid", $"rid").collect()
-      .map(r => r.getLong(0) -> Option(r.get(1)).map(_.asInstanceOf[Long])).toMap
-    assert(gotGen === want)
+    assert(run(
+      lrows.map { case (lid, k, t) => (lid, sk(k), t) }.toDF("lid", "k", "t"),
+      rrows.map { case (rid, k, t) => (rid, sk(k), t) }.toDF("rid", "k", "rt")) === want)
   }
 
   test("randomized: native as-of == naive per-row latest-right reference (multi-partition)") {
@@ -140,7 +70,7 @@ class AsOfNativeSpec extends GraftSpec {
       .zipWithIndex.map { case ((k, t), i) => (i.toLong, k, t) }
     val left = lrows.toDF("lid", "k", "t").repartition(7)
     val right = rrows.toDF("rid", "k", "rt").repartition(3)
-    val got = AsOfJoinNative(left, right, Seq("k"), "t", "rt", Some("rid"))
+    val got = AsOfJoin(left, right, Seq("k"), "t", "rt", Seq("rid"), Some("rid"))
       .select($"lid", $"rid")
       .collect().map(r => r.getLong(0) -> Option(r.get(1)).map(_.asInstanceOf[Long]))
       .toMap
@@ -150,45 +80,5 @@ class AsOfNativeSpec extends GraftSpec {
               else Some(cands.maxBy(r => (r._3, r._1))._1))
     }.toMap
     assert(got === want)
-  }
-
-  test("optimizer rule: left-side filter pushes through the custom node; right-side stays above") {
-    import org.apache.spark.sql.catalyst.plans.logical.Filter
-    val left = Seq((1L, 10L, 100L), (2L, 20L, 200L), (3L, 30L, 300L))
-      .toDF("k", "t", "lval")
-    val right = Seq((1L, 5L, "a"), (2L, 15L, "b"), (3L, 25L, "c"))
-      .toDF("k", "rt", "v")
-    val joined = AsOfJoinNative(left, right, Seq("k"), "t", "rt")
-
-    // left-side predicate: pushes BELOW the node — here all the way
-    // into the LocalRelation (built-in rules fold it at optimize
-    // time: 3 left rows become 2), with no Filter left anywhere above
-    val lf = joined.filter($"lval" > 150L)
-    val lPlan = lf.queryExecution.optimizedPlan
-    val node = lPlan.collectFirst { case j: AsOfJoinNode => j }
-    assert(node.isDefined, lPlan.toString)
-    assert(lPlan.collect { case f: Filter => f }.isEmpty, lPlan.toString)
-    val lRows = node.get.left.collectFirst {
-      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        l.data.length
-    }
-    assert(lRows === Some(2), lPlan.toString)
-    assert(lf.collect().map(_.getAs[String]("v")).sorted.toSeq === Seq("b", "c"))
-
-    // right-side predicate: must NOT push (it would change which right
-    // row is latest) — the Filter stays above the node and the right
-    // LocalRelation keeps all 3 rows
-    val rf = joined.filter($"v" =!= "a")
-    val rPlan = rf.queryExecution.optimizedPlan
-    val rNode = rPlan.collectFirst { case j: AsOfJoinNode => j }
-    assert(rNode.isDefined, rPlan.toString)
-    assert(rNode.get.right.collectFirst {
-      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        l.data.length
-    } === Some(3), rPlan.toString)
-    assert(rPlan.collect {
-      case f: Filter if f.condition.references.exists(_.name == "v") => f
-    }.nonEmpty, rPlan.toString)
-    assert(rf.collect().map(_.getAs[String]("v")).sorted.toSeq === Seq("b", "c"))
   }
 }
