@@ -12,7 +12,7 @@ import org.apache.spark.sql.SparkSession
   * coalesced no further, while the compute-heavy small-byte shuffles
   * (the q33 Jaccard block join, the q127 wedge closure, q135's decrement
   * probes) collapsed to one task by size and serialized: q33 0.72→2.07 s,
-  * q135 3.6→5.6 s. Per-loop widths stay governed by [[operators.IterScope]]. */
+  * q135 3.6→5.6 s. Per-loop widths stay governed by [[operators.Fixpoint]]. */
 object GraftSession {
   def apply(app: String): SparkSession = {
     val cpus = sys.env.get("SPARK_GRAFT_CPUS").filter(_.nonEmpty)

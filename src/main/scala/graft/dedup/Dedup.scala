@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.operators.Fixpoint
 import graft.text.TextFunctions._
 
 /** Deduplication operators for large-scale corpus pipelines:
@@ -480,10 +481,9 @@ object Dedup {
     * (`label := label(label)`), which shortcuts chains so convergence
     * is O(log diameter) rounds rather than O(diameter). Each round
     * costs two equi-join shuffles (neighborhood min + jump) and one
-    * groupBy-min; the label frontier is localCheckpoint'ed every round
-    * so lineage stays flat across iterations (a cluster deployment
-    * points `sparkContext.setCheckpointDir` at reliable storage and
-    * uses `checkpoint()` — same shape). Driver state per round is ONE
+    * groupBy-min. The rounds run on [[graft.operators.Fixpoint]],
+    * which checkpoints the label frontier every round so lineage stays
+    * flat across iterations. Driver state per round is ONE
     * aggregated checksum, never the labels: labels only ever decrease,
     * so Σlabel is strictly monotone until fixpoint and an unchanged
     * sum IS convergence — no label-diff join, no collect.
@@ -499,19 +499,6 @@ object Dedup {
     *   single-digit diameter and finish in 2-3 rounds. If the cap is
     *   hit before fixpoint an IllegalStateException is thrown rather
     *   than returning silently-unmerged components. */
-  /** Release the cached blocks behind a localCheckpoint'ed label
-    * frontier. A superseded round's frontier is never read again, but
-    * its checkpoint blocks would otherwise stay pinned in executor
-    * storage until the job's RDDs are garbage-collected — up to
-    * maxRounds block sets for a deep graph (advice r6). The
-    * checkpointed plan's only leaf is the materialized RDD. */
-  private def releaseFrontier(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        scala.util.Try(lr.rdd.unpersist(blocking = false)): Unit
-      case _ => ()
-    }
-
   def connectedComponents(
       pairs: DataFrame,
       idA: String = "id_a",
@@ -527,104 +514,52 @@ object Dedup {
       // reuses the cached partitioning as a shuffle-hash join — the
       // edge set never moves again and no per-round broadcast of the
       // label frontier is built
-      .repartition(graft.operators.IterScope.width(pairs.sparkSession),
-        col("src"))
+      .repartition(Fixpoint.width(pairs.sparkSession), col("src"))
       .persist()
+    // label rounds run with AQE off: it billed a scheduling barrier +
+    // one job per materialized stage per round on label frames it can
+    // never re-optimize (see Fixpoint.scope)
+    val loop = Fixpoint.Loop("connectedComponents", sumCol = "label",
+      maxRounds = maxRounds, adaptive = false)
     try {
       // seed with the CLOSED-neighborhood minimum — the first
       // propagation round folded into initialization at the cost the
       // plain distinct() would pay anyway (one groupBy over the edge
       // set). Near-clique components (the shape banded near-dup
       // candidates produce) converge one full round earlier; labels
-      // remain node ids, so the pointer-jump invariant holds.
-      var labels = edges.groupBy(col("src"))
+      // remain node ids, so the pointer-jump invariant holds. The
+      // seed's one probe job also yields its row count.
+      val seed = loop.seed(edges.groupBy(col("src"))
         .agg(min(col("dst")).as("nmin"))
         .select(col("src").as("node"),
-          least(col("src"), col("nmin")).as("label"))
-        .localCheckpoint(false)
-      // RAW-job checksum over the internal RDD (r15): the per-round
-      // convergence probe is the loop's only driver action, and a
-      // full SQL aggregate action costs ~4-6x the raw job in driver
-      // machinery (fresh QueryExecution + stage scheduling + listener
-      // events — measured 0.15 vs 0.024 s per action on this box).
-      // Arbitrary-precision Σlabel (labels are node ids; a 100 TB
-      // corpus's Σ of 2^63-range ids overflows long — the former
-      // decimal(38,0) SQL accumulator, now a BigInteger fold), same
-      // materialize-the-lazy-checkpoint side effect. The SEED pass
-      // also carries the row count, folding what used to be three
-      // driver actions on the seed frame (eager-checkpoint job +
-      // isEmpty + checksum) into ONE materializing raw job.
-      def checksumCount(df: DataFrame): (Long, java.math.BigInteger) = {
-        val ord = df.schema.fieldIndex("label")
-        df.queryExecution.toRdd.mapPartitions { it =>
-          var n = 0L
-          var acc = java.math.BigInteger.ZERO
-          while (it.hasNext) {
-            n += 1
-            acc = acc.add(java.math.BigInteger.valueOf(it.next().getLong(ord)))
-          }
-          Iterator.single((n, acc))
-        }.fold((0L, java.math.BigInteger.ZERO)) {
-          case ((na, sa), (nb, sb)) => (na + nb, sa.add(sb))
-        }
-      }
-      val (nSeed, seedSum) = checksumCount(labels)
-      if (nSeed == 0L) labels
-      else {
-        def checksum(df: DataFrame): java.math.BigInteger = checksumCount(df)._2
-        var prev = seedSum
-        var converged = false
-        var round = 0
-        // node-sized fixpoint rounds run under the narrow non-adaptive
-        // loop scope (graft.operators.IterScope): AQE billed a
-        // scheduling barrier + one job per materialized stage per
-        // round on label frames it can never re-optimize, and the
-        // narrow width cuts per-stage task scheduling on tiny stages.
-        // The E-sized edge build above stays at full adaptive width.
-        graft.operators.IterScope(pairs.sparkSession) {
-        while (!converged && round < maxRounds) {
-          // min over the closed neighborhood…
-          // the label frontier is SHUFFLE_HASH-joined against the
-          // co-partitioned edge cache: only the node-sized labels
-          // shuffle; a broadcast here would rebuild and ship the
-          // frontier via a driver-synchronous job every round
-          val msgs = edges
-            .join(labels.withColumnRenamed("node", "src")
-              .hint("SHUFFLE_HASH"), "src")
-            .select(col("dst").as("node"), col("label"))
-          val mins = labels.unionByName(msgs)
-            .groupBy("node").agg(min("label").as("label"))
-          // …then jump: adopt the label's own label. Labels are always
-          // existing node ids (mins of node ids), so the join hits —
-          // left+coalesce only guards the root (label(root) = root).
-          // Both sides alias every column before the self-join so no
-          // attribute is shared across sides (Catalyst's self-join
-          // dedup chokes on the raw form).
-          val lookup = mins.select(
-            col("node").as("jump_key"), col("label").as("jump_label"))
-          // lazy checkpoint: the checksum action right below is what
-          // materializes it — one job per round, not two
-          val jumped = mins
-            .withColumnRenamed("label", "jump_key")
-            .join(lookup.hint("SHUFFLE_HASH"), Seq("jump_key"), "left")
-            .select(col("node"),
-              coalesce(col("jump_label"), col("jump_key")).as("label"))
-            .localCheckpoint(false)
-          val cur = checksum(jumped)
-          // the checksum action materialized `jumped`; the previous
-          // frontier is now superseded — release its blocks (the final
-          // frontier is returned still-materialized, never released)
-          releaseFrontier(labels)
-          converged = cur.compareTo(prev) == 0
-          prev = cur
-          labels = jumped
-          round += 1
-        }
-        }
-        if (!converged) throw new IllegalStateException(
-          s"connectedComponents did not converge in $maxRounds rounds")
-        labels
-      }
+          least(col("src"), col("nmin")).as("label")))
+      if (seed.probe.rows == 0L) seed.df
+      else loop.run(seed) { labels =>
+        // min over the closed neighborhood…
+        // the label frontier is SHUFFLE_HASH-joined against the
+        // co-partitioned edge cache: only the node-sized labels
+        // shuffle; a broadcast here would rebuild and ship the
+        // frontier via a driver-synchronous job every round
+        val msgs = edges
+          .join(labels.withColumnRenamed("node", "src")
+            .hint("SHUFFLE_HASH"), "src")
+          .select(col("dst").as("node"), col("label"))
+        val mins = labels.unionByName(msgs)
+          .groupBy("node").agg(min("label").as("label"))
+        // …then jump: adopt the label's own label. Labels are always
+        // existing node ids (mins of node ids), so the join hits —
+        // left+coalesce only guards the root (label(root) = root).
+        // Both sides alias every column before the self-join so no
+        // attribute is shared across sides (Catalyst's self-join
+        // dedup chokes on the raw form).
+        val lookup = mins.select(
+          col("node").as("jump_key"), col("label").as("jump_label"))
+        mins
+          .withColumnRenamed("label", "jump_key")
+          .join(lookup.hint("SHUFFLE_HASH"), Seq("jump_key"), "left")
+          .select(col("node"),
+            coalesce(col("jump_label"), col("jump_key")).as("label"))
+      } { (prev, cur) => cur.sum == prev.sum }
     } finally { edges.unpersist(blocking = false): Unit }
   }
 

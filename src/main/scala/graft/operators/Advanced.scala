@@ -2975,11 +2975,12 @@ object Advanced {
       * rounds: the edge list is static and read-only (cached, probed
       * through a broadcast-hash join against the bad frontier — past
       * broadcast size the same join shuffles ∝ edges-of-bad); only the
-      * NODE-sized degree table mutates, localCheckpoint'ed and
-      * released per round (the E20 mechanism), so total decrement work
-      * is ∝ E across ALL rounds (each edge dies at most twice) and
-      * driver state is one count per round. Three relaxations chain
-      * into each round-job through lazy localCheckpoints (r10) —
+      * NODE-sized degree table mutates, checkpointed and released per
+      * round by [[Fixpoint]] (the loop driver E20's components share),
+      * so total decrement work is ∝ E across ALL rounds (each edge dies
+      * at most twice) and driver state is one count per round. Three
+      * relaxations chain into each round-job through lazy
+      * localCheckpoints (r10) —
       * each intermediate is computed exactly once and the fixed
       * per-job machinery amortizes 3× (9.5 → 5.8 s at sf0.1 together
       * with the build rewrite). Hash-exact oracle (r10): the k-core is
@@ -3015,7 +3016,7 @@ object Advanced {
       // adjacency movement and zero driver-synchronous broadcast
       // builds inside the rounds (3.1 → 2.4 s warm loop at sf0.1; a
       // cluster sizes the width via spark.graft.loop.partitions)
-      val loopW = IterScope.width(s)
+      val loopW = Fixpoint.width(s)
       val adj = perOrder
         .select(explode($"parts").as("node"), $"parts")
         .select($"node", explode($"parts").as("v"))
@@ -3024,32 +3025,32 @@ object Advanced {
         .agg(collect_set($"v").as("nbrs"))
         .repartition(loopW, $"node")
         .persist()
+      // the loop's shuffles move ≤ n node rows at the narrow loop
+      // width; AQE STAYS ON here: its partition coalescing collapses
+      // the tiny frontier shuffles to single tasks, measured faster
+      // than the stage-job barriers it costs (4.17 vs 4.65 s medians —
+      // see Fixpoint.scope). THREE relaxations chain into each round's
+      // one probe job, amortizing the fixed per-job machinery across
+      // rounds; a zero-removal relaxation is a no-op, so the
+      // count-unchanged convergence test still holds at chain
+      // granularity. Each intermediate is lazily checkpointed, backed
+      // by one RDD shared by all its plan references (frontier probe +
+      // survivor filter), so the chain computes every relaxation
+      // exactly once — the naive fold re-ran them per reference
+      // (measured 19 s vs 8.8 s at sf0.1).
+      val loop = Fixpoint.Loop("kcore", sumCol = "dg", maxRounds = 40,
+        adaptive = true, stepsPerRound = 3)
       try {
-        var deg = adj.groupBy($"node")
+        // the seed's one probe job yields n and Σdg = 2·|und|: k comes
+        // from the degree table (one row per node), with no aggregate
+        // action of its own and no second 2·E-row scan of the edges
+        val seed = loop.seed(adj.groupBy($"node")
           .agg(sum(size($"nbrs")).cast("long").as("dg"))
-          .repartition(loopW, $"node")
-          .localCheckpoint()
-        // k from the DEGREE table (Σdg = 2·|und|, one row per node) —
-        // a node-sized pass instead of a second 2·E-row scan of sym
-        val st = deg.agg(sum($"dg").as("sd"),
-          count(lit(1)).as("n")).first()
-        val k = 7L * st.getLong(0) / (10L * st.getLong(1))
-        // the same aggregate already counted the nodes — a separate
-        // deg.count() was one redundant SQL action (r15)
-        var nPrev = st.getLong(1)
-        // the loop's shuffles move ≤ n node rows — IterScope narrows
-        // the width (8 partitions cut per-stage task-scheduling
-        // overhead 4× vs the session's 32); AQE STAYS ON here: its
-        // partition coalescing collapses the tiny frontier shuffles
-        // to single tasks, measured faster than the stage-job
-        // barriers it costs (4.17 vs 4.65 s medians — see IterScope)
-        IterScope(s, disableAqe = false) {
-        var round = 0
-        var done = false
-        // one relaxation: remove the sub-k frontier, decrement its
-        // neighbors of removed nodes lose one degree per incident
-        // edge, so the decrement shuffle is ∝ edges INCIDENT TO the
-        // bad frontier only
+          .repartition(loopW, $"node"))
+        val k = 7L * seed.probe.sum.longValueExact / (10L * seed.probe.rows)
+        // one relaxation: remove the sub-k frontier; neighbors of
+        // removed nodes lose one degree per incident edge, so the
+        // decrement shuffle is ∝ edges INCIDENT TO the bad frontier only
         def relax(d0: org.apache.spark.sql.DataFrame) = {
           // survivorship is a plain filter on the degree table — the
           // bad set never needs joining back (r10; the old anti-join
@@ -3073,50 +3074,12 @@ object Advanced {
             .select($"node",
               ($"dg" - coalesce($"rm", lit(0L))).as("dg"))
         }
-        while (!done && round < 40) {
-          // THREE relaxations chain into each round-job, amortizing
-          // the fixed per-job machinery (driver-synchronous broadcast
-          // construction + checkpoint + count) across rounds; a
-          // zero-removal relaxation is a no-op, so the count-unchanged
-          // convergence test still holds at chain granularity.
-          val steps = 3
-          // intermediate relaxations are LAZY-localCheckpointed: each
-          // is backed by one RDD shared by all its plan references
-          // (bad-broadcast + survivor filter), so the chain computes
-          // every relaxation exactly once — the naive fold re-ran
-          // them per reference (measured 19 s vs 8.8 s at sf0.1)
-          val inter = scala.collection.mutable.ArrayBuffer
-            .empty[org.apache.spark.sql.DataFrame]
-          var nxt = deg
-          for (i <- 1 to steps) {
-            nxt = relax(nxt)
-            if (i < steps) { nxt = nxt.localCheckpoint(false); inter += nxt }
-          }
-          val next = nxt.localCheckpoint(false)
-          // materialize the checkpoint chain with a RAW job over the
-          // internal RDD: the convergence test only needs a row count,
-          // and a full SQL count action costs ~4-6x the raw job in
-          // driver machinery (fresh QueryExecution + AQE stage
-          // scheduling + listener events) — measured 0.15 vs 0.024 s
-          // per action on this box (r15, guide §5 "the driver should
-          // do almost no data work")
-          val n2 = next.queryExecution.toRdd.count()
-          inter.foreach(df =>
-            scala.util.Try(df.rdd.unpersist(blocking = false)): Unit)
-          scala.util.Try(deg.rdd.unpersist(blocking = false)): Unit
-          deg = next
-          round += 1
-          done = n2 == nPrev || n2 == 0
-          nPrev = n2
+        loop.run(seed)(relax) { (prev, cur) =>
+          cur.rows == prev.rows || cur.rows == 0
         }
-        if (!done) throw new IllegalStateException(
-          s"kcore did not converge in 40 rounds")
-        val out = deg
           .select($"node".as("part"), $"dg".as("core_degree"),
             lit(k).as("k"))
           .orderBy($"part")
-        out
-        }
       } finally { adj.unpersist(blocking = false): Unit }
     },
 

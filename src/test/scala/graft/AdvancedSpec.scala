@@ -1083,6 +1083,16 @@ class AdvancedSpec extends GraftSpec {
     }
   }
 
+  // the fixpoint loops release every superseded round: after a call
+  // only the returned frame's checkpoint may stay persisted
+  for (name <- Seq("q135_kcore", "q57_dedup_clusters"))
+    test(s"$name leaves at most its returned frame persisted") {
+      val added = persistedBy {
+        SparkEntry.queries(name)(spark, sf("sf0.01")).collect(): Unit
+      }
+      assert(added.size <= 1, s"new persistent RDDs: $added")
+    }
+
   test("q129 path mining: top-20 trigrams match a naive per-user sequence replay") {
     val dir = sf("sf0.001")
     val ev = graft.Tables.events(spark, dir)

@@ -431,6 +431,24 @@ class DedupSpec extends GraftSpec {
     assert(labels.forall(_._2 == 0L))
   }
 
+  test("connected components: the round cap throws, restores confs, releases every round") {
+    // two rounds cannot carry the label across a 200-node path: the
+    // guard must throw, and the loop must leave no conf changed and no
+    // checkpoint or edge cache pinned behind it
+    val chain = (0L until 199L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val parts0 = spark.conf.get("spark.sql.shuffle.partitions")
+    val aqe0 = spark.conf.get("spark.sql.adaptive.enabled")
+    val added = persistedBy {
+      val e = intercept[IllegalStateException] {
+        Dedup.connectedComponents(chain, maxRounds = 2)
+      }
+      assert(e.getMessage === "connectedComponents did not converge in 2 rounds")
+    }
+    assert(spark.conf.get("spark.sql.shuffle.partitions") === parts0)
+    assert(spark.conf.get("spark.sql.adaptive.enabled") === aqe0)
+    assert(added.isEmpty, s"new persistent RDDs: $added")
+  }
+
   test("connected components: empty pair set yields empty labeling") {
     val empty = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
     assert(Dedup.connectedComponents(empty).isEmpty)

@@ -23,6 +23,26 @@ trait GraftSpec extends AnyFunSuite {
     dir.toString
   }
 
+  /** Ids of the RDDs that `body` leaves persisted. The context tracks
+    * persisted RDDs weakly, so a leaked checkpoint that a GC collects
+    * mid-call would drop out of `getPersistentRDDs` and hide the leak;
+    * a poller therefore holds every RDD persisted meanwhile strongly
+    * until the difference is taken. */
+  def persistedBy(body: => Unit): Set[Int] = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val held = java.util.concurrent.ConcurrentHashMap.newKeySet[AnyRef]()
+    @volatile var polling = true
+    val poller = new Thread(() =>
+      while (polling) { sc.getPersistentRDDs.values.foreach(held.add); Thread.sleep(2) })
+    poller.setDaemon(true)
+    poller.start()
+    try body finally { polling = false; poller.join() }
+    val added = sc.getPersistentRDDs.keySet.toSet -- before
+    held.clear()
+    added
+  }
+
   override def withFixture(test: NoArgTest): Outcome =
     try super.withFixture(test)
     finally tempDirs.synchronized {

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.GraftSpec
 
 /** r14 optimization internals: the FileFeed staged-render memo and the
-  * IterScope conf scope — the two round-14 mechanisms whose failure
+  * fixpoint loops' conf scope — the two round-14 mechanisms whose failure
   * modes would be silent (wrong batch bytes fed to a stream; confs
   * leaking out of a loop). */
 class FeedAndScopeSpec extends GraftSpec {
@@ -53,33 +53,34 @@ class FeedAndScopeSpec extends GraftSpec {
     } finally feed.close()
   }
 
-  test("IterScope restores confs on success and on exception; width is conf-driven") {
+  test("Fixpoint scope restores confs; width from conf") {
+    import graft.operators.Fixpoint
     val s = spark
     val parts0 = s.conf.get("spark.sql.shuffle.partitions")
     val aqe0 = s.conf.get("spark.sql.adaptive.enabled")
-    graft.operators.IterScope(s) {
+    Fixpoint.scope(s, adaptive = false) {
       assert(s.conf.get("spark.sql.shuffle.partitions") === "8")
       assert(s.conf.get("spark.sql.adaptive.enabled") === "false")
     }
     assert(s.conf.get("spark.sql.shuffle.partitions") === parts0)
     assert(s.conf.get("spark.sql.adaptive.enabled") === aqe0)
-    // disableAqe = false leaves AQE untouched (the kcore variant)
-    graft.operators.IterScope(s, disableAqe = false) {
+    // adaptive = true leaves AQE untouched (the kcore variant)
+    Fixpoint.scope(s, adaptive = true) {
       assert(s.conf.get("spark.sql.adaptive.enabled") === aqe0)
     }
     // exception path still restores
     intercept[RuntimeException] {
-      graft.operators.IterScope(s) { throw new RuntimeException("boom") }
+      Fixpoint.scope(s, adaptive = false) { throw new RuntimeException("boom") }
     }
     assert(s.conf.get("spark.sql.shuffle.partitions") === parts0)
     assert(s.conf.get("spark.sql.adaptive.enabled") === aqe0)
     // width follows the conf
-    s.conf.set(graft.operators.IterScope.LoopPartitionsConf, "5")
+    s.conf.set(Fixpoint.LoopPartitionsConf, "5")
     try {
-      assert(graft.operators.IterScope.width(s) === 5)
-      graft.operators.IterScope(s) {
+      assert(Fixpoint.width(s) === 5)
+      Fixpoint.scope(s, adaptive = false) {
         assert(s.conf.get("spark.sql.shuffle.partitions") === "5")
       }
-    } finally s.conf.unset(graft.operators.IterScope.LoopPartitionsConf)
+    } finally s.conf.unset(Fixpoint.LoopPartitionsConf)
   }
 }
