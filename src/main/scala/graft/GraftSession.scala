@@ -2,10 +2,13 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The local session every `src/main` main runs on: `local[cpus]` with
-  * one shuffle partition per cpu, UTC and the UI off. The cpus come from
+/** The one place that configures Spark: every `src/main` main and the
+  * test suite run on this session, `local[cpus]` with one shuffle
+  * partition per cpu, UTC and the UI off. The cpus come from
   * `SPARK_GRAFT_CPUS`, or else every available processor. Callers set
-  * their own log level.
+  * their own log level. No session extensions are installed: the native
+  * functions (`graft.functions`) register themselves in whichever
+  * session a column form or `function.register` is given.
   *
   * Adaptive execution keeps Spark's defaults (on, parallelismFirst).
   * With parallelismFirst=false plus advisory sizing, KB-sized stages

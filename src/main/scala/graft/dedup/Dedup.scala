@@ -118,18 +118,6 @@ object Dedup {
     pmod(lit(a) * pmod(h, lit(MinhashP)) + lit(b), lit(MinhashP))
   }
 
-  /** Column form of the portable 60-bit base hash (the kernel twin is
-    * [[shingleHashesPortable]]): top 15 md5 hex nibbles as a long. */
-  private def md5Base60(s: Column): Column =
-    conv(substring(md5(s), 1, 15), 16, 10).cast("long")
-
-  /** MinHash signature as `numHashes` array-min aggregations over the
-    * shingle set — pure column expressions, one pass, no explode. */
-  def minhashSignature(shingles: Column, numHashes: Int): Seq[Column] = {
-    val hashed = transform(shingles, s => md5Base60(s))
-    (0 until numHashes).map(i => array_min(transform(hashed, h => mix(h, i))))
-  }
-
   /** MinHash + LSH near-duplicate pairs.
     *
     * bands×rowsPerBand hashes; candidate pairs share at least one band

@@ -5,9 +5,10 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** One of the engine's native SQL functions: its registry name and its
-  * one builder. [[graft.GraftExtensions]] injects the builder into every
-  * session built with `spark.sql.extensions`; the column forms register
-  * it on first use in sessions built without them, and never again.
+  * one builder. The column form registers the builder in the session it
+  * is given on first use, and never again; SQL text can call the function
+  * once `register` has run on that session. A session's registry is its
+  * own, so pass the session the frame resolves in.
   */
 final class NativeFunction(name: String, exprClass: Class[_], arity: Int)(
     build: Seq[Expression] => Expression) {
@@ -15,7 +16,7 @@ final class NativeFunction(name: String, exprClass: Class[_], arity: Int)(
   val id: FunctionIdentifier = FunctionIdentifier(name)
 
   /** Checks the argument count, then builds the expression. */
-  val builder: Seq[Expression] => Expression = { exprs =>
+  private val builder: Seq[Expression] => Expression = { exprs =>
     if (exprs.length != arity)
       throw new AnalysisException(
         errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
@@ -27,10 +28,6 @@ final class NativeFunction(name: String, exprClass: Class[_], arity: Int)(
   }
 
   private val info = new ExpressionInfo(exprClass.getName, name)
-
-  /** The `(identifier, info, builder)` triple `injectFunction` takes. */
-  def description: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (id, info, builder)
 
   /** Registers the function in `spark`'s registry unless it is there. */
   def register(spark: SparkSession): Unit = {

@@ -20,10 +20,6 @@ object Shims {
     * Ref: scripts/02_queries_analysis.sql:123. */
   def dayName(ts: Column): Column = date_format(ts, "EEEE")
 
-  /** The raw PG `TO_CHAR(ts,'Day')` form, blank-padded to 9 chars —
-    * only for byte-exact parity with PostgreSQL output. */
-  def dayNamePgPadded(ts: Column): Column = rpad(date_format(ts, "EEEE"), 9, " ")
-
   /** `EXTRACT(EPOCH FROM (a - b))` in seconds.
     * Ref: scripts/02_queries_analysis.sql:134; etl_pipeline.py:572,747. */
   def epochDiff(a: Column, b: Column): Column =
@@ -53,9 +49,6 @@ object Shims {
     * result parity. Ref: scripts/07_lambda_functions.py:95-99,178-180. */
   def approxGeoDistKm(lat1: Column, lon1: Column, lat2: Column, lon2: Column): Column =
     sqrt(pow(lat1 - lat2, 2) + pow(lon1 - lon2, 2)) * lit(111.0)
-
-  /** Clamp below, e.g. `max(0, x)`. Ref: etl_pipeline.py:849,876,880. */
-  def clampMin(x: Column, lo: Double): Column = greatest(lit(lo), x)
 
   /** Half-up rounding to `n` decimals, cast to double so the output type
     * is engine-portable (DuckDB's round(double) is double).

@@ -111,124 +111,117 @@ object FleetOps {
   }
 
   // defs (not vals): the oracle SQL embeds [[oltpDir]], which
-  // [[reconfigure]] swaps between fuzz corpora — rebuilding the map is
-  // pure string work and keeps every QueryDef's oracle pointing at the
-  // corpus its fn will actually read. Memoized per (dir, asOf) so one
-  // defs call doesn't restate the 26 oracles 26 times.
-  @volatile private var oraclesCache: (String, String, Map[String, String]) = null
-  private def oracles: Map[String, String] = {
-    val (d, a) = (oltpDir, cfg.asOfDate)
-    val c = oraclesCache
-    if (c != null && c._1 == d && c._2 == a) c._3
-    else { val m = FleetOracles.all(d, a); oraclesCache = (d, a, m); m }
+  // [[reconfigure]] swaps between fuzz corpora. Each call restates the
+  // oracles once, for the corpus its entries will read, so no QueryDef's
+  // oracle points at another corpus.
+  def defs: Seq[QueryDef] = {
+    val (c, dir) = state
+    val oracles = FleetOracles.all(dir, c.asOfDate)
+    def q(name: String)(fn: Oltp => DataFrame): QueryDef =
+      QueryDef(name, (s, _) => fn(oltp(s)), oracles.get(name))
+    def qEtl(name: String)(fn: Pipeline.EtlOutput => DataFrame): QueryDef =
+      QueryDef(name, (s, _) => fn(etl(s)), oracles.get(name))
+    Seq(
+      q("fl_q01_fleet_mix")(t => Analytics.q1FleetMix(t)),
+      q("fl_q02_expiring_licenses")(t => Analytics.q2ExpiringLicenses(t, asOf)),
+      q("fl_q03_trips_by_status")(t => Analytics.q3TripsByStatus(t)),
+      q("fl_q04_deliveries_by_city")(t => Analytics.q4DeliveriesByCity(t, asOf)),
+      q("fl_q05_driver_workload")(t => Analytics.q5DriverWorkload(t)),
+      q("fl_q06_driver_productivity")(t => Analytics.q6DriverProductivity(t, asOf)),
+      q("fl_q07_route_fuel")(t => Analytics.q7RouteFuel(t)),
+      q("fl_q08_delays_by_weekday")(t => Analytics.q8DelaysByWeekday(t, asOf)),
+      q("fl_q09_maintenance_cost_km")(t => Analytics.q9MaintenanceCostPerKm(t)),
+      q("fl_q10_driver_ranking")(t => Analytics.q10DriverRanking(t, asOf)),
+      q("fl_q11_monthly_trend")(t => Analytics.q11MonthlyTrend(t)),
+      q("fl_q12_hour_dow_pivot")(t => Analytics.q12HourDowPivot(t, asOf)),
+
+      // deterministic total ORDER BY on every warehouse output, matching
+      // the oracle SQL — the driver's value hash is order-sensitive
+      qEtl("fl_etl_fact_deliveries")(_.fact.orderBy("delivery_id")),
+      qEtl("fl_etl_dim_vehicle_scd2")(_.dims("dim_vehicle").orderBy("vehicle_id")),
+      qEtl("fl_etl_dim_customer")(_.dims("dim_customer").orderBy("customer_key")),
+      qEtl("fl_etl_dim_route")(_.dims("dim_route").orderBy("route_id")),
+      qEtl("fl_etl_dim_driver_scd2")(_.dims("dim_driver").orderBy("driver_id")),
+      qEtl("fl_etl_report_driver_totals")(
+        _.reports("report_driver_totals").orderBy("driver_key")),
+      qEtl("fl_etl_report_route_totals")(
+        _.reports("report_route_totals").orderBy("route_key")),
+
+      // calendar dims are OLTP-independent — gated over a full year / the
+      // fixed 96-slot grid so every derived attribute is exercised
+      QueryDef("fl_etl_dim_date",
+        (s, _) => Dimensions.dimDate(s, "2025-01-01", "2025-12-31").orderBy("date_key"),
+        oracles.get("fl_etl_dim_date")),
+      QueryDef("fl_etl_dim_time",
+        (s, _) => Dimensions.dimTime(s).orderBy("time_key"),
+        oracles.get("fl_etl_dim_time")),
+
+      /** J7 with actual history: two consecutive daily batches through
+        * Scd2.applyBatch — closed versions, re-inserted new versions, and
+        * untouched unchanged rows all hash-compared against a DuckDB
+        * transcription of the MERGE contract (etl_pipeline.py:1030-1098). */
+      QueryDef("fl_etl_dim_vehicle_scd2_2day",
+        (s, _) => scd2TwoDay(s, Dimensions.dimVehicle,
+          "vehicle_id", Dimensions.vehicleTracked, "vehicle_sk"),
+        oracles.get("fl_etl_dim_vehicle_scd2_2day")),
+
+      /** dim_driver through two daily batches — the dim with the heaviest
+        * derived tracked columns (success rate, /30.44 experience,
+        * performance buckets, ref etl_pipeline.py:733-812, :1041). */
+      QueryDef("fl_etl_dim_driver_scd2_2day",
+        (s, _) => scd2TwoDay(s, Dimensions.dimDriver,
+          "driver_id", Dimensions.driverTracked, "driver_sk"),
+        oracles.get("fl_etl_dim_driver_scd2_2day")),
+
+      /** J7 composed: THREE daily batches with the deterministic A→B→A
+        * flip-back probe ([[scd2ThreeDay]]) — closed, reopened, and
+        * re-closed versions all hash-compared against an independent
+        * 3-fold MERGE unroll in DuckDB. */
+      QueryDef("fl_etl_dim_vehicle_scd2_3day",
+        (s, _) => scd2ThreeDay(s, Dimensions.dimVehicle,
+          "vehicle_id", Dimensions.vehicleTracked, "vehicle_sk", "status"),
+        oracles.get("fl_etl_dim_vehicle_scd2_3day")),
+
+      QueryDef("fl_etl_dim_driver_scd2_3day",
+        (s, _) => scd2ThreeDay(s, Dimensions.dimDriver,
+          "driver_id", Dimensions.driverTracked, "driver_sk", "phone"),
+        oracles.get("fl_etl_dim_driver_scd2_3day")),
+
+      /** Point-in-time surrogate-key resolution (Scd2.resolveKeys — the
+        * as-of join formulation of `fact.date BETWEEN dim.valid_from AND
+        * dim.valid_to`, ref etl_pipeline.py:1137-1168) against the
+        * 2-batch driver history: day-1 events of changed drivers resolve
+        * to the closed version, day-2 events to the re-inserted one. */
+      QueryDef("fl_etl_fact_pit_keys_2day",
+        (s, _) => {
+          val t = oltp(s)
+          // the two event dates are memoized metadata probes ([[pitEventDates]],
+          // warmed off-clock like the stored dim) — running them as driver
+          // collect jobs inside the entry was 2 of its 6.5×-local-ratio
+          // jobs
+          val (day2, day1) = pitEventDates(s)
+          val dim2 = storedDriverDim(s)
+          def monthOf(d: String) = java.sql.Date.valueOf(d.substring(0, 7) + "-01")
+          val events = t.deliveries
+            // partition prune to the event days' months (p_month layout),
+            // then the semantic predicates — the scan skips every other
+            // month directory
+            .filter(col("p_month").isin(monthOf(day1), monthOf(day2)))
+            .filter(col("delivery_status") === "delivered" &&
+              to_date(col("delivered_datetime"))
+                .isin(java.sql.Date.valueOf(day1), java.sql.Date.valueOf(day2)))
+            .join(t.trips.select(col("trip_id"), col("driver_id")), Seq("trip_id"))
+            .select(col("delivery_id"), col("driver_id"),
+              to_date(col("delivered_datetime")).as("event_date"))
+          Scd2.resolveKeys(events, dim2,
+              "driver_id", "driver_id", "event_date", "driver_sk")
+            .select(col("delivery_id"), col("driver_id"), col("event_date"),
+              col("driver_sk"))
+            .orderBy(col("delivery_id"))
+        },
+        oracles.get("fl_etl_fact_pit_keys_2day")),
+    )
   }
-
-  private def q(name: String)(fn: Oltp => DataFrame): QueryDef =
-    QueryDef(name, (s, _) => fn(oltp(s)), oracles.get(name))
-
-  private def qEtl(name: String)(fn: Pipeline.EtlOutput => DataFrame): QueryDef =
-    QueryDef(name, (s, _) => fn(etl(s)), oracles.get(name))
-
-  def defs: Seq[QueryDef] = Seq(
-    q("fl_q01_fleet_mix")(t => Analytics.q1FleetMix(t)),
-    q("fl_q02_expiring_licenses")(t => Analytics.q2ExpiringLicenses(t, asOf)),
-    q("fl_q03_trips_by_status")(t => Analytics.q3TripsByStatus(t)),
-    q("fl_q04_deliveries_by_city")(t => Analytics.q4DeliveriesByCity(t, asOf)),
-    q("fl_q05_driver_workload")(t => Analytics.q5DriverWorkload(t)),
-    q("fl_q06_driver_productivity")(t => Analytics.q6DriverProductivity(t, asOf)),
-    q("fl_q07_route_fuel")(t => Analytics.q7RouteFuel(t)),
-    q("fl_q08_delays_by_weekday")(t => Analytics.q8DelaysByWeekday(t, asOf)),
-    q("fl_q09_maintenance_cost_km")(t => Analytics.q9MaintenanceCostPerKm(t)),
-    q("fl_q10_driver_ranking")(t => Analytics.q10DriverRanking(t, asOf)),
-    q("fl_q11_monthly_trend")(t => Analytics.q11MonthlyTrend(t)),
-    q("fl_q12_hour_dow_pivot")(t => Analytics.q12HourDowPivot(t, asOf)),
-
-    // deterministic total ORDER BY on every warehouse output, matching
-    // the oracle SQL — the driver's value hash is order-sensitive
-    qEtl("fl_etl_fact_deliveries")(_.fact.orderBy("delivery_id")),
-    qEtl("fl_etl_dim_vehicle_scd2")(_.dims("dim_vehicle").orderBy("vehicle_id")),
-    qEtl("fl_etl_dim_customer")(_.dims("dim_customer").orderBy("customer_key")),
-    qEtl("fl_etl_dim_route")(_.dims("dim_route").orderBy("route_id")),
-    qEtl("fl_etl_dim_driver_scd2")(_.dims("dim_driver").orderBy("driver_id")),
-    qEtl("fl_etl_report_driver_totals")(
-      _.reports("report_driver_totals").orderBy("driver_key")),
-    qEtl("fl_etl_report_route_totals")(
-      _.reports("report_route_totals").orderBy("route_key")),
-
-    // calendar dims are OLTP-independent — gated over a full year / the
-    // fixed 96-slot grid so every derived attribute is exercised
-    QueryDef("fl_etl_dim_date",
-      (s, _) => Dimensions.dimDate(s, "2025-01-01", "2025-12-31").orderBy("date_key"),
-      oracles.get("fl_etl_dim_date")),
-    QueryDef("fl_etl_dim_time",
-      (s, _) => Dimensions.dimTime(s).orderBy("time_key"),
-      oracles.get("fl_etl_dim_time")),
-
-    /** J7 with actual history: two consecutive daily batches through
-      * Scd2.applyBatch — closed versions, re-inserted new versions, and
-      * untouched unchanged rows all hash-compared against a DuckDB
-      * transcription of the MERGE contract (etl_pipeline.py:1030-1098). */
-    QueryDef("fl_etl_dim_vehicle_scd2_2day",
-      (s, _) => scd2TwoDay(s, Dimensions.dimVehicle,
-        "vehicle_id", Dimensions.vehicleTracked, "vehicle_sk"),
-      oracles.get("fl_etl_dim_vehicle_scd2_2day")),
-
-    /** dim_driver through two daily batches — the dim with the heaviest
-      * derived tracked columns (success rate, /30.44 experience,
-      * performance buckets, ref etl_pipeline.py:733-812, :1041). */
-    QueryDef("fl_etl_dim_driver_scd2_2day",
-      (s, _) => scd2TwoDay(s, Dimensions.dimDriver,
-        "driver_id", Dimensions.driverTracked, "driver_sk"),
-      oracles.get("fl_etl_dim_driver_scd2_2day")),
-
-    /** J7 composed: THREE daily batches with the deterministic A→B→A
-      * flip-back probe ([[scd2ThreeDay]]) — closed, reopened, and
-      * re-closed versions all hash-compared against an independent
-      * 3-fold MERGE unroll in DuckDB. */
-    QueryDef("fl_etl_dim_vehicle_scd2_3day",
-      (s, _) => scd2ThreeDay(s, Dimensions.dimVehicle,
-        "vehicle_id", Dimensions.vehicleTracked, "vehicle_sk", "status"),
-      oracles.get("fl_etl_dim_vehicle_scd2_3day")),
-
-    QueryDef("fl_etl_dim_driver_scd2_3day",
-      (s, _) => scd2ThreeDay(s, Dimensions.dimDriver,
-        "driver_id", Dimensions.driverTracked, "driver_sk", "phone"),
-      oracles.get("fl_etl_dim_driver_scd2_3day")),
-
-    /** Point-in-time surrogate-key resolution (Scd2.resolveKeys — the
-      * as-of join formulation of `fact.date BETWEEN dim.valid_from AND
-      * dim.valid_to`, ref etl_pipeline.py:1137-1168) against the
-      * 2-batch driver history: day-1 events of changed drivers resolve
-      * to the closed version, day-2 events to the re-inserted one. */
-    QueryDef("fl_etl_fact_pit_keys_2day",
-      (s, _) => {
-        val t = oltp(s)
-        // the two event dates are memoized metadata probes ([[pitEventDates]],
-        // warmed off-clock like the stored dim) — running them as driver
-        // collect jobs inside the entry was 2 of its 6.5×-local-ratio
-        // jobs
-        val (day2, day1) = pitEventDates(s)
-        val dim2 = storedDriverDim(s)
-        def monthOf(d: String) = java.sql.Date.valueOf(d.substring(0, 7) + "-01")
-        val events = t.deliveries
-          // partition prune to the event days' months (p_month layout),
-          // then the semantic predicates — the scan skips every other
-          // month directory
-          .filter(col("p_month").isin(monthOf(day1), monthOf(day2)))
-          .filter(col("delivery_status") === "delivered" &&
-            to_date(col("delivered_datetime"))
-              .isin(java.sql.Date.valueOf(day1), java.sql.Date.valueOf(day2)))
-          .join(t.trips.select(col("trip_id"), col("driver_id")), Seq("trip_id"))
-          .select(col("delivery_id"), col("driver_id"),
-            to_date(col("delivered_datetime")).as("event_date"))
-        Scd2.resolveKeys(events, dim2,
-            "driver_id", "driver_id", "event_date", "driver_sk")
-          .select(col("delivery_id"), col("driver_id"), col("event_date"),
-            col("driver_sk"))
-          .orderBy(col("delivery_id"))
-      },
-      oracles.get("fl_etl_fact_pit_keys_2day")),
-  )
 
   /** Two consecutive daily SCD2 batches over a staged dim.
     *

@@ -91,20 +91,12 @@ object StreamingOps {
     * dominate at gate feed size; a production job sizes partitions to
     * key volume), tmpfs checkpoint dir when available, conf
     * save/restore, checkpoint cleanup. Confs are snapshotted BEFORE
-    * any set so an exception mid-setup still restores them all. */
+    * any set so an exception mid-setup still restores them all. The
+    * state store provider is the session's own
+    * `spark.sql.streaming.stateStore.providerClass` (PERF.md measures
+    * the default HDFS-backed store against RocksDB). */
   private def withStreamingHarness[T](s: SparkSession,
-      confs0: Map[String, String])(body: String => T): T = {
-    // SPARK_GRAFT_STATE_STORE=rocksdb flips every harness to the
-    // RocksDB state store provider (PERF.md carries the paired
-    // default-vs-RocksDB measurement; default stays the HDFS-backed
-    // in-memory store, which wins at gate feed size — RocksDB's native
-    // write path pays off once per-key state no longer fits the heap,
-    // i.e. at production key cardinality, not at sf0.1)
-    val confs =
-      if (sys.env.get("SPARK_GRAFT_STATE_STORE").contains("rocksdb"))
-        confs0 + ("spark.sql.streaming.stateStore.providerClass" ->
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      else confs0
+      confs: Map[String, String])(body: String => T): T = {
     val saved = confs.keys.map(k => k -> s.conf.get(k)).toMap
     val ckBase = new java.io.File("/dev/shm")
     val ck = new java.io.File(

@@ -459,20 +459,6 @@ object Vectors {
   private def planeRow(k: Int): Column =
     array((0 until 64).map(i => lit(planeVal(k, i))): _*)
 
-  /** Random-hyperplane LSH signature: `numPlanes` sign bits packed into
-    * a long. Vectors in the same bucket are likely cosine-close. */
-  def lshSignature(vec: Column, numPlanes: Int): Column = {
-    require(numPlanes <= 63, "signature packs into one long")
-    val bits = (0 until numPlanes).map { p =>
-      val proj = aggregate(
-        zip_with(vec, sequence(lit(0), size(vec) - 1),
-          (x, i) => x.cast("double") * element_at(planeRow(p), i.cast("int") + 1)),
-        lit(0.0), (acc, x) => acc + x)
-      when(proj > 0, lit(1L << p)).otherwise(lit(0L))
-    }
-    bits.reduce(_ + _)
-  }
-
   /** ANN top-k via LSH bucketing: candidates share a signature under at
     * least one of `tables` independent hash tables (multi-probe by
     * table, not by bit-flip). Equi-join on (table, signature) — one

@@ -36,11 +36,6 @@ object TextFunctions {
   def tokenCharCount(text: Column): Column =
     aggregate(transform(tokens(text), t => length(t)), lit(0), (acc, x) => acc + x)
 
-  /** Ratio of characters matching a regex character class. */
-  def charClassRatio(text: Column, clazz: String): Column =
-    length(regexp_replace(text, s"[^$clazz]", "")) * lit(1.0) /
-      nullif(length(text), lit(0))
-
   /** Canonical-form fingerprint: md5 of lower-cased,
     * whitespace-collapsed text — the exact-dedup key. */
   def fingerprint(text: Column): Column =

@@ -7,8 +7,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.Outcome
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all suites (one JVM-wide session —
-  * getOrCreate dedupes across suites in the same forked test JVM). */
+/** Shared local SparkSession for all suites: the mains' own
+  * [[GraftSession]], one per forked test JVM. */
 trait GraftSpec extends AnyFunSuite {
   lazy val spark: SparkSession = GraftSpec.session
   def sf(s: String): String = s"/root/testdata/$s"
@@ -53,16 +53,7 @@ trait GraftSpec extends AnyFunSuite {
 
 object GraftSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // static conf — honored only by the first session on the context,
-      // so the injection test (PlanSpec) must run against THIS session
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
+    val s = GraftSession("graft-test")
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -377,18 +377,37 @@ class PlanSpec extends GraftSpec {
     emb.unpersist()
   }
 
-  test("GraftExtensions injects fnv64/fdot via spark.sql.extensions (SURVEY §7.3)") {
-    // GraftSpec builds the suite session with
-    // .config("spark.sql.extensions", "graft.GraftExtensions") — a
-    // STATIC conf honored at first-session creation, so resolution here
-    // proves config-based injection (no register() call in this test)
-    val r = spark.sql(
-      "SELECT fnv64('abc') AS h, fdot(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)), " +
-        "array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT))) AS d, " +
-        "nfc('e\u0301') AS n").head()
-    assert(r.getAs[Long]("h") === graft.functions.FnvHash64.hash("abc"))
-    assert(r.getAs[Double]("d") === 11.0)
-    assert(r.getAs[String]("n") === "\u00e9")
+  test("native functions resolve from SQL in a fresh session") {
+    import graft.functions.{FloatVecDot, MisraGries, NfcNormalize, TopKStruct}
+    val all = Seq(FnvHash64.function, FloatVecDot.function, TopKStruct.function,
+      NfcNormalize.function, MisraGries.function)
+    val ids = all.map(_.id)
+    def fresh() = {
+      val s = spark.newSession()
+      val registry = s.sessionState.functionRegistry
+      ids.foreach(id => if (registry.functionExists(id)) registry.dropFunction(id))
+      assert(ids.forall(!registry.functionExists(_)))
+      s
+    }
+    val v = array(lit(1.0f), lit(2.0f))
+    val viaColumns = fresh()
+    FnvHash64.column(viaColumns, lit("abc"))
+    FloatVecDot.dot(viaColumns, v, v)
+    TopKStruct.topk(viaColumns, lit(1.0), lit("a"), 1)
+    NfcNormalize.column(viaColumns, lit("a"))
+    MisraGries.sketch(viaColumns, lit("a"), 1)
+    val viaRegister = fresh()
+    all.foreach(_.register(viaRegister))
+    Seq(viaColumns, viaRegister).foreach { s =>
+      assert(ids.forall(s.sessionState.functionRegistry.functionExists))
+      val r = s.sql(
+        "SELECT fnv64('abc') AS h, fdot(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)), " +
+          "array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT))) AS d, " +
+          "nfc('e\u0301') AS n").head()
+      assert(r.getAs[Long]("h") === FnvHash64.hash("abc"))
+      assert(r.getAs[Double]("d") === 11.0)
+      assert(r.getAs[String]("n") === "\u00e9")
+    }
   }
 
   test("native functions register once: a second dot call keeps the builder") {
@@ -396,7 +415,7 @@ class PlanSpec extends GraftSpec {
     import org.apache.spark.sql.catalyst.FunctionIdentifier
     val id = FunctionIdentifier("fdot")
     val v = array(lit(1.0f), lit(2.0f))
-    // a session whose registry lacks fdot, as one built without extensions
+    // a session whose registry lacks fdot
     val s = spark.newSession()
     val registry = s.sessionState.functionRegistry
     registry.dropFunction(id)
@@ -407,13 +426,9 @@ class PlanSpec extends GraftSpec {
     FloatVecDot.dot(s, v, v)
     assert(registry.lookupFunctionBuilder(id).get eq first.get)
     assert(s.range(1).select(FloatVecDot.dot(s, v, v)).head().getDouble(0) === 5.0)
-    // the extensions-built session keeps its injected builder too
-    val injected = spark.sessionState.functionRegistry.lookupFunctionBuilder(id).get
-    FloatVecDot.dot(spark, v, v)
-    assert(spark.sessionState.functionRegistry.lookupFunctionBuilder(id).get eq injected)
     // the shared builder checks its arity
     val err = intercept[org.apache.spark.sql.AnalysisException](
-      spark.sql("SELECT fdot(array(CAST(1.0 AS FLOAT)))").collect())
+      s.sql("SELECT fdot(array(CAST(1.0 AS FLOAT)))").collect())
     assert(err.getMessage.contains("WRONG_NUM_ARGS"), err.getMessage)
   }
 
