@@ -72,9 +72,14 @@ object Bench {
     }.sorted
     val floor = floorSamples(floorSamples.length / 2)
 
+    // why an entry's last failed pass failed, for the artifact's detail
+    val errors = scala.collection.mutable.Map.empty[String, String]
     def timeOnce(q: QueryDef): Double = {
       val t0 = System.nanoTime()
-      try q.fn(spark, sfDir).count() catch { case _: Throwable => return -1.0 }
+      try q.fn(spark, sfDir).count() catch { case e: Throwable =>
+        errors(q.name) = Verify.describe(e)
+        return -1.0
+      }
       (System.nanoTime() - t0) / 1e9
     }
 
@@ -118,25 +123,30 @@ object Bench {
     // times that make a contended session detectable (a clean session
     // has tight pass spreads; a noisy one shows outlier passes). Written
     // to a FILE because the driver only captures a bounded stdout tail.
-    val detail = results.map { case (k, v, _, warm, passes, (sm, sd)) =>
-      val spill = if (sm > 0 || sd > 0) s""","spill_mem":$sm,"spill_disk":$sd""" else ""
-      s""""$k":{"t":$v,"warm":$warm,"passes":[${passes.mkString(",")}]$spill}"""
-    }.mkString("{", ",", "}")
-    val fullJson =
+    // The artifact's detail also names each failed pass's exception; the
+    // contract line printed below keeps the detail without it.
+    def fullJson(withErrors: Boolean) = {
+      val detail = results.map { case (k, v, _, warm, passes, (sm, sd)) =>
+        val spill = if (sm > 0 || sd > 0) s""","spill_mem":$sm,"spill_disk":$sd""" else ""
+        val error = errors.get(k).filter(_ => withErrors)
+          .map(e => s""","error":${Verify.json.writeValueAsString(e)}""").getOrElse("")
+        s""""$k":{"t":$v,"warm":$warm,"passes":[${passes.mkString(",")}]$spill$error}"""
+      }.mkString("{", ",", "}")
       s"""{"metric":"$metricName",$headline,"floor_samples":[${floorSamples.map(r4).mkString(",")}],"queries":$qs,"detail":$detail,"sf":"$sfDir"}"""
+    }
     // SPARK_GRAFT_BENCH_OUT redirects the artifact so an off-SF stress
     // run can never overwrite the recorded sf0.1 full-suite baseline
     val outFile = new java.io.File(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       if (only.isEmpty) "BENCH_FULL.json" else "BENCH_PARTIAL.json"))
     val w = new java.io.PrintWriter(outFile, "UTF-8")
-    try w.println(fullJson) finally w.close()
+    try w.println(fullJson(withErrors = true)) finally w.close()
 
     spark.stop()
     // contract line (full per-query map) first, then a SHORT headline
     // line LAST: the driver keeps only the final ~2KB of stdout, and the
     // 85-entry query map alone overflows that — the closing line always
     // fits, parses on its own, and points at the full artifact.
-    println(fullJson)
+    println(fullJson(withErrors = false))
     // the compact map keeps the closing line inside the captured tail:
     // the 12 reference KPI queries are the contract's headline set; the
     // full ~200-entry map lives in queries_file (the full line above

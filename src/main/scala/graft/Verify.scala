@@ -1,6 +1,8 @@
 package graft
+import java.io.File
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -20,20 +22,14 @@ object Verify {
     spark.stop()
   }
 
-  /** JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    * — a tab or CR in builder-authored SQL would otherwise make the
-    * driver's json.load fail and silently zero the round's correctness.
-    * Shared with tools.SplitFuzz, which rewrites split-dependent oracle
-    * SQL and re-serializes the dump's oracle_sql.json. */
-  private[graft] def jsonEscape(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
+  /** Reads and writes the dump's JSON maps (oracle_sql.json,
+    * failures.json); shared with tools.SplitFuzz, which rewrites a dump's
+    * oracle_sql.json, and Bench, which records why a pass failed. */
+  private[graft] val json = new ObjectMapper().registerModule(DefaultScalaModule)
+
+  /** A thrown entry as failures.json and Bench's artifact record it. */
+  private[graft] def describe(e: Throwable): String =
+    s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(500)}"
 
   /** The dump loop behind [[main]], session-reusable (tools.Fuzz runs
     * it once per generated corpus inside one session). */
@@ -45,7 +41,7 @@ object Verify {
     require(unknown.isEmpty,
       s"unknown entry name(s): ${unknown.toSeq.sorted.mkString(", ")}")
     spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
+    new File(outDir).mkdirs()
     // A thrown entry must leave a visible trace: r7's events schema break
     // made 11 entries silently ABSENT from the dump and the round's
     // correctness JSON recorded zero failures. Collect every failure and
@@ -58,56 +54,22 @@ object Verify {
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name FAILED: ${e.getMessage}")
-        failures(name) = s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(500)}"
+        failures(name) = describe(e)
       }
     }
-    def q(s: String): String = jsonEscape(s)
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    json.writeValue(new File(s"$outDir/oracle_sql.json"), SparkEntry.oracleSql)
     // A RESTRICTED dump must not hide failures a previous full dump of
     // this dir recorded for entries it didn't re-run: carry forward the
-    // existing map's other entries, drop ones this run fixed, add this
-    // run's failures. (Parsing matches the writer below: one-line JSON,
-    // string values, escapes produced by q().)
+    // existing map's other entries, drop ones this run re-ran and ones no
+    // longer in the registry (a failure recorded for a since-renamed or
+    // removed entry would otherwise be perpetuated by every restricted
+    // dump forever), add this run's failures.
+    val failuresFile = new File(s"$outDir/failures.json")
     val carried: Map[String, String] =
-      if (only.isEmpty) Map.empty
-      else {
-        val f = Paths.get(s"$outDir/failures.json")
-        if (!Files.exists(f)) Map.empty
-        else {
-          val re = """"((?:[^"\\]|\\.)*)"\s*:\s*"((?:[^"\\]|\\.)*)"""".r
-          // sequential unescape (chained replaces double-decode "\\n")
-          def unq(s: String): String = {
-            val b = new StringBuilder; var i = 0
-            while (i < s.length) {
-              if (s(i) == '\\' && i + 1 < s.length) {
-                s(i + 1) match {
-                  case 'n' => b += '\n'; case 'r' => b += '\r'
-                  case 't' => b += '\t'
-                  case 'u' if i + 5 < s.length =>
-                    b += Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar
-                    i += 4
-                  case other => b += other
-                }
-                i += 2
-              } else { b += s(i); i += 1 }
-            }
-            b.toString
-          }
-          // drop keys this run re-ran AND keys no longer in the registry:
-          // a failure recorded for a since-renamed/removed entry would
-          // otherwise be perpetuated by every restricted dump forever
-          re.findAllMatchIn(Files.readString(f))
-            .map(m => unq(m.group(1)) -> unq(m.group(2)))
-            .filterNot { case (k, _) =>
-              only(k) || !SparkEntry.queries.contains(k) }
-            .toMap
-        }
-      }
-    val failJson = (carried ++ failures)
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/failures.json"), failJson)
+      if (only.isEmpty || !failuresFile.exists) Map.empty
+      else json.readValue(failuresFile, classOf[Map[String, String]])
+        .filterNot { case (k, _) => only(k) || !SparkEntry.queries.contains(k) }
+    json.writeValue(failuresFile, carried ++ failures)
     if (failures.nonEmpty)
       System.err.println(s"[verify] ${failures.size} entries FAILED: " +
         failures.keys.mkString(", "))

@@ -119,14 +119,9 @@ object SplitFuzz {
         finally spark.conf.unset(StreamingOps.SplitConf)
         // re-serialize oracle_sql.json with the spec's rewrites (the
         // dump wrote the registry spelling)
-        if (rewrites(spec).nonEmpty) {
-          val json = oracleFor(spec)
-            .map { case (k, v) =>
-              s"${graft.Verify.jsonEscape(k)}: ${graft.Verify.jsonEscape(v)}" }
-            .mkString("{", ",", "}")
-          java.nio.file.Files.writeString(
-            java.nio.file.Paths.get(s"$out/oracle_sql.json"), json)
-        }
+        if (rewrites(spec).nonEmpty)
+          graft.Verify.json.writeValue(
+            new java.io.File(s"$out/oracle_sql.json"), oracleFor(spec))
         println(s"[splitfuzz] seed=$seed spec=$spec -> $out")
       }
     }

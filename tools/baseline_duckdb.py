@@ -8,23 +8,16 @@ compared against.
 
 Usage: python3 tools/baseline_duckdb.py <sfDir> <verifyOutDir> [reps=3]
 """
-import json, sys, time, statistics
-import duckdb
+import json, os, sys, time, statistics
 
-TABLES = ["region", "nation", "customer", "supplier", "part",
-          "orders", "lineitem", "events", "documents", "embeddings"]
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+from check import connect
 
 
 def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
     reps = int(sys.argv[3]) if len(sys.argv) > 3 else 3
-    con = duckdb.connect()
-    for t in TABLES:
-        try:
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
-        except Exception:
-            pass
+    con = connect(sf_dir)
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     rows, total = [], 0.0
     for name, sql in sorted(oracle.items()):
