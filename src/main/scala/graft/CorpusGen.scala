@@ -3,9 +3,12 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Seeded, Spark-native corpus generator for the SCALING benchmark
-  * (PERF.md): `documents` and `embeddings` tables with the same schema
-  * as the driver testdata, at arbitrary row counts.
+/** Seeded, Spark-native corpus generator for the fuzz tools
+  * (`tools.Fuzz`, `tools.SplitFuzz`) and the benchmark harness: the
+  * documents, embeddings, events and relational tables with the same
+  * schema as the driver testdata, at arbitrary row counts. Scale
+  * corpora (10×, 100× sf0.1) come from `tools.Sf1Gen` instead (PERF.md,
+  * "One scale harness").
   *
   * Determinism: every random draw is `xxhash64(seed, salt, rowIdentity)`
   * — a function of row identity only (partition-layout-independent, the
@@ -21,7 +24,7 @@ import org.apache.spark.sql.functions._
   *  - near-duplicate documents are PLANTED at a fixed rate (1% of docs
   *    mirror their predecessor with ~8% word mutation) so true-pair
   *    density grows linearly with n, as in a real dedup corpus;
-  *  - embeddings cluster around 32 centroids (IVF/PQ recall stays
+  *  - embeddings cluster on 32 centroids (IVF/PQ recall stays
   *    meaningful) with 2% planted near-identical vectors.
   */
 object CorpusGen {
@@ -34,7 +37,7 @@ object CorpusGen {
     (h(seed, salt, cols: _*).bitwiseAND(lit(Long.MaxValue)))
       .cast("double") / lit(Long.MaxValue.toDouble)
 
-  def documents(spark: SparkSession, n: Long, seed: Long = 7L): DataFrame = {
+  def documents(spark: SparkSession, n: Long, seed: Long): DataFrame = {
     val vocab = 1000
     val id = col("id")
     val isDup = id % 100 === 1 && id > 0
@@ -58,8 +61,8 @@ object CorpusGen {
       .withColumn("n_chars", length(col("text")))
   }
 
-  def embeddings(spark: SparkSession, n: Long, dim: Int = 64,
-      seed: Long = 7L): DataFrame = {
+  def embeddings(spark: SparkSession, n: Long, seed: Long): DataFrame = {
+    val dim = 64
     val id = col("id")
     val isDup = id % 50 === 1 && id > 0
     val baseId = when(isDup, id - 1).otherwise(id)
@@ -75,7 +78,7 @@ object CorpusGen {
       pmod(h(seed, 10, id), lit(5)).cast("int").as("label"))
   }
 
-  /** Seeded event stream for the sessionization / temporal curve
+  /** Seeded event stream for the sessionization / temporal entries
     * (schema-compatible with the driver's events table). Users get
     * `n / 200` ids round-robin, so per-user volume stays ~200 at every
     * scale while the user count grows with the corpus — the
@@ -86,7 +89,7 @@ object CorpusGen {
     * multiple >30-min-gap sessions without any prefix-sum at gentime.
     * Monotone per user by construction: consecutive deltas are
     * 5 min ± 4 min > 0. */
-  def events(spark: SparkSession, n: Long, seed: Long = 7L): DataFrame = {
+  def events(spark: SparkSession, n: Long, seed: Long): DataFrame = {
     val id = col("id")
     val nUsers = math.max(1L, n / 200)
     val user = pmod(h(seed, 20, id), lit(nUsers))
@@ -109,28 +112,23 @@ object CorpusGen {
       format_string("{\"k\":%d}", pmod(h(seed, 25, id), lit(100))).as("props"))
   }
 
-  /** Seeded relational slice for the graph/linkage curve (q94
-    * PageRank, q95 blocked record linkage): customer / supplier /
-    * orders / lineitem with the driver testdata's key and name shapes,
-    * restricted to the columns those operators read (parquet column
-    * pruning makes unread columns timing-irrelevant anyway).
-    * Cardinality ratios follow the driver data (customers = orders/10,
-    * suppliers = customers/15, lineitems = 4·orders), so the purchase
-    * graph's edge count grows linearly with scale like a real
-    * order-flow graph. */
+  /** Seeded relational slice (customer / supplier / part / nation /
+    * region / orders / lineitem) with the driver testdata's key and
+    * name shapes and every column it ships. Cardinality ratios follow
+    * the driver data (customers = orders/10, suppliers = customers/15,
+    * lineitems = 4·orders), so the purchase graph's edge count grows
+    * linearly with scale like a real order-flow graph. */
   def relational(spark: SparkSession, dir: String, nOrders: Long,
-                 seed: Long = 7L): Unit = {
+                 seed: Long): Unit = {
     val id = col("id")
     val nCust = math.max(10L, nOrders / 10)
     val nSupp = math.max(5L, nCust / 15)
     val segs = array(lit("AUTOMOBILE"), lit("BUILDING"), lit("FURNITURE"),
       lit("HOUSEHOLD"), lit("MACHINERY"))
-    // Full testdata schema (r13): the whole-surface fuzz sweep drives
-    // EVERY entry over these corpora, so each table carries every
-    // column the driver parquet ships — earlier rounds generated only
-    // the columns the 63-entry representative subset read. New columns
-    // use fresh salts (44+) so the pre-r13 columns stay byte-identical
-    // on the established scaling corpora.
+    // The whole-surface fuzz sweep drives every entry over these
+    // corpora, so each table carries every column the driver parquet
+    // ships. Each column draws from its own salt, so adding a column
+    // leaves the existing ones byte-identical.
     spark.range(nCust).select(
       id.as("c_custkey"),
       format_string("Customer#%09d", id).as("c_name"),
@@ -179,12 +177,9 @@ object CorpusGen {
       .write.mode("overwrite").parquet(s"$dir/region.parquet")
     val prios = array(lit("1-URGENT"), lit("2-HIGH"), lit("3-MEDIUM"),
       lit("4-NOT SPECIFIED"), lit("5-LOW"))
-    // The slice mirrors the sf testdata's 1995–2001 calendar (r10):
-    // the curve corpus originally sat at a 2024 base + 400-day span,
-    // which turned the gates' literal date windows degenerate — q43's
-    // `o_orderdate < 1999` matched nothing, `l_shipdate > 1999`
-    // matched everything, and q153's 1996 prune window selected zero
-    // files, so the curve was pricing empty or unpruned scans. Orders
+    // The slice mirrors the sf testdata's 1995–2001 calendar, so the
+    // gates' literal date windows (q43's `o_orderdate < 1999`, q153's
+    // 1996 prune window) keep their sf selectivity (PERF.md). Orders
     // span 6 years; l_shipdate is drawn INDEPENDENTLY from the same
     // 1995 base over a 6.5-year span (per-row shipdate >= orderdate
     // does NOT hold — only the aggregate span extends past the order
@@ -223,48 +218,17 @@ object CorpusGen {
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
   }
 
-  /** Write a corpus dir compatible with [[Tables]] (documents.parquet /
-    * embeddings.parquet / events.parquet / the relational slice),
-    * marker-guarded per table so repeated runs reuse what exists and
-    * adding a table only fills the gap. */
-  def write(spark: SparkSession, dir: String, nDocs: Long, nVecs: Long,
-            nEvents: Long = 0L, nOrders: Long = 0L): Unit = {
-    val marker = new java.io.File(dir, "_CORPUS_READY")
-    if (!marker.exists()) {
-      documents(spark, nDocs)
-        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      embeddings(spark, nVecs)
-        .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-      marker.createNewFile(): Unit
-    }
-    // events joined the corpus after round 7: backfill into dirs whose
-    // docs/vecs marker predates it
-    if (nEvents > 0 && !new java.io.File(dir, "events.parquet").exists())
-      events(spark, nEvents)
-        .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    // relational slice joined in round 8 (q94/q95): same backfill rule;
-    // the analytics columns (o_totalprice/o_orderdate/c_mktsegment/
-    // nation/region) joined with the fourth wave (q119/q128/q136/
-    // q138/q139/q141) — a dir generated before them regenerates the
-    // slice (deterministic seed → identical rows, new columns)
-    if (nOrders > 0) {
-      // guard the schema probes behind existence checks: a dir with
-      // orders.parquet but a missing/partial lineitem.parquet
-      // (interrupted generation) must regenerate, not throw
-      def tableOk(name: String, col: String): Boolean = {
-        val f = new java.io.File(dir, name)
-        f.exists() &&
-          (try spark.read.parquet(f.getPath).columns.contains(col)
-           catch { case _: Exception => false })
-      }
-      // l_tax/part.p_brand are the newest slice columns (r13 full
-      // testdata schema) — probing for them regenerates any dir built
-      // under an older partial schema (deterministic seed → the
-      // pre-r13 columns come back byte-identical)
-      if (!tableOk("orders.parquet", "o_totalprice") ||
-          !tableOk("lineitem.parquet", "l_tax") ||
-          !tableOk("part.parquet", "p_brand"))
-        relational(spark, dir, nOrders)
-    }
+  /** Write the seeded 1× corpus into `dir`, overwriting what is there:
+    * every table of [[Tables.names]], with 5k documents, 2k embeddings,
+    * 100k events and the relational slice over 15k orders. The seed
+    * fixes every row. */
+  def write(spark: SparkSession, dir: String, seed: Long): Unit = {
+    documents(spark, 5000L, seed)
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    embeddings(spark, 2000L, seed)
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    events(spark, 100000L, seed)
+      .write.mode("overwrite").parquet(s"$dir/events.parquet")
+    relational(spark, dir, 15000L, seed)
   }
 }

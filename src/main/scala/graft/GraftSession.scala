@@ -4,7 +4,9 @@ import org.apache.spark.sql.SparkSession
 
 /** The one place that configures Spark: every `src/main` main and the
   * test suite run on this session, `local[cpus]` with one shuffle
-  * partition per cpu, UTC and the UI off. The cpus come from
+  * partition per cpu, UTC, the UI off, and nanosecond parquet
+  * timestamps read as raw longs (`Tables.events` converts them to
+  * microseconds). The cpus come from
   * `SPARK_GRAFT_CPUS`, or else every available processor. Callers set
   * their own log level. No session extensions are installed: the native
   * functions (`graft.functions`) register themselves in whichever
@@ -26,6 +28,7 @@ object GraftSession {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
   }
 }

@@ -27,7 +27,8 @@ object Tables {
 
   /** `events.ts` has shipped in two physical schemas across driver
     * regenerations: TIMESTAMP(NANOS) (which Spark can only read as a raw
-    * ns long via the legacy conf) and TIMESTAMP(MICROS, NTZ). Branch on
+    * ns long, under the legacy conf [[GraftSession]] sets) and
+    * TIMESTAMP(MICROS, NTZ). Branch on
     * the schema actually loaded so either layout works:
     *   - LongType        → floor-convert ns→µs with integer division
     *                       (`ts/1000` in double loses precision; ns epochs
@@ -39,7 +40,6 @@ object Tables {
   def events(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = apply(s, d, "events")
     raw.schema("ts").dataType match {
       case LongType         => raw.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
@@ -54,7 +54,7 @@ object Tables {
   /** `embeddings.embedding` must reach the vector kernels as
     * `array<float>` (FloatVecDot's input contract). The driver has
     * only ever shipped float32, but a regeneration to float64 would —
-    * like the events ns→µs drift that broke round 7 — silently change
+    * like the events ns→µs drift once did — silently change
     * the physical schema; normalize on load so the whole sim/ surface
     * keeps working either way. */
   def embeddings(s: SparkSession, d: String): DataFrame = {

@@ -671,17 +671,17 @@ object SimilarityOps {
         .orderBy($"doc_id")
     },
 
-    /** The PRODUCTION cluster-dedup chain (verdict r6 Missing #1):
+    /** The PRODUCTION cluster-dedup chain:
       * LSH candidate pairs (q34's banded MinHash + exact verify) →
       * connected components → kept-corpus accounting — the composition
       * a real 100 TB dedup run executes, where the exact all-pairs
       * kernel feeding q66 is infeasible. Every stage is an equi-join
       * shuffle (bands, verification, component rounds), so the chain
-      * stays ~linear where q66 inherits the kernel's O(n²) (measured:
-      * ScaleBench runs this uncapped). Hash-exact since r10 (the
-      * portable MinHash family): the oracle chains q66's recursive
-      * component closure and kept-corpus accounting onto
-      * [[minhashCtes]]'s replayed LSH pairs — the full production
+      * stays ~linear where q66 inherits the kernel's O(n²) (measured
+      * uncapped by the scale procedure, PERF.md "One scale harness").
+      * Hash-exact through the portable MinHash family: the oracle
+      * chains q66's recursive component closure and kept-corpus
+      * accounting onto [[minhashCtes]]'s replayed LSH pairs — the full production
       * chain verified end-to-end against an independent engine.
       * DedupSpec additionally proves the composed pipeline resolves
       * exactly the exact-pair pipeline's clusters on planted
@@ -722,12 +722,13 @@ object SimilarityOps {
       * the election is "reusable over exact or LSH pair sources").
       * q76 proves the election arithmetic against the recursive-CTE +
       * window oracle but takes the exact O(n²) Jaccard kernel as its
-      * pair source, so it inherits the kernel's 10× ScaleBench cap —
+      * pair source, so it inherits the kernel's 10× cap in the scale
+      * procedure (PERF.md, "One scale harness") —
       * THIS entry feeds the identical election the banded-MinHash
       * pairs (q34's kernel), keeping every stage an equi-join shuffle
       * (bands → verify → component rounds → max-struct election), so
       * the full keep-WHICH policy chain runs uncapped like q68.
-      * Hash-exact since r10 (the portable MinHash family): the oracle
+      * Hash-exact through the portable MinHash family: the oracle
       * chains q76's closure + window election onto [[minhashCtes]]'s
       * replayed LSH pairs. DedupAndSimSpec additionally proves the
       * LSH-sourced election emits EXACTLY the exact-sourced
@@ -1055,15 +1056,16 @@ object SimilarityOps {
       * cosine pairs → components → keep lowest id per component. The
       * quantizer is the corpus-adaptive √n model shared with q67's
       * IVFPQ ([[adaptiveIvfModel]]) — nlist ∝ √corpus bounds the
-      * within-bucket pair space to n^1.5 at ANY scale, making the r6
-      * fixed-nlist caveat (pair space grew with the corpus) moot;
-      * ScaleBench now runs this uncapped. Hash-exact since r10 (the
-      * q44 Lloyd-unroll applied under the ADAPTIVE quantizer — nlist
-      * = max(16, ⌈√n⌉) computed by the same correctly-rounded
-      * ceil/sqrt in both engines): the oracle trains the identical
-      * centroids, buckets every vector, scores within-bucket pairs
-      * with the exact fold order, closes components via the q57
-      * recursive CTE, and keeps each component's minimum id.
+      * within-bucket pair space to n^1.5 at ANY scale, so the pair
+      * space no longer grows with the corpus as under a fixed nlist;
+      * the scale procedure (PERF.md, "One scale harness") runs this
+      * uncapped. Hash-exact through the q44 Lloyd-unroll applied under
+      * the ADAPTIVE quantizer (nlist = max(16, ⌈√n⌉) computed by the
+      * same correctly-rounded ceil/sqrt in both engines): the oracle
+      * trains the identical centroids, buckets every vector, scores
+      * within-bucket pairs with the exact fold order, closes
+      * components via the q57 recursive CTE, and keeps each
+      * component's minimum id.
       * VectorsSpec keeps the planted-cluster keep contract as the
       * semantic check. Threshold is corpus-calibrated as in
       * practice: this synthetic corpus's near-dup band tops out near

@@ -52,7 +52,7 @@ object StreamingOps {
     * engines at binary halfway points, which the sf0.1 feed hits. */
   private def round3Sql(x: String) = graft.functions.Shims.roundPortableSql(x, 3)
 
-  /** Micro-batch SPLIT-AXIS override (r13 Next #3): where a micro-batch
+  /** Micro-batch SPLIT-AXIS override: where a micro-batch
     * boundary lands relative to a session gap / watermark advance is a
     * semantic axis — same-batch-dedup vs cross-batch-state-drop vs
     * late-drop are different code paths that data seeds alone never
@@ -337,16 +337,10 @@ object StreamingOps {
     val b1 = ev.filter(inB1)
     val b2 = ev.filter(!inB1)
       .unionByName(b1.filter(pmod(col("key"), lit(100L)) === 0))
-    runFileFed(s,
-      Map("spark.sql.shuffle.partitions" -> "2",
-        // dropDuplicatesWithinWatermark emits only on ARRIVAL; eviction
-        // changes future admission and runs against the same watermark
-        // whether it happens in the interstitial no-data batch or at
-        // the head of the next data batch — so the ~0.5 s
-        // watermark-advance batch between the two drops buys nothing
-        // (r15; outputs stay oracle-hash-exact, incl. the planted
-        // exactly-at-horizon redeliveries and the split-axis fuzz)
-        "spark.sql.streaming.noDataMicroBatches.enabled" -> "false"),
+    // Skipping the no-data batch between the two drops was faster in
+    // every one of 10 paired runs, but by 10% or more in only 8, below
+    // the bar to keep it (PERF.md, "st_dedup_ttl: the no-data batch").
+    runFileFed(s, Map("spark.sql.shuffle.partitions" -> "2"),
       "st_ttl_sink", Seq(b1, b2)) { src =>
       Streams.streamingDedupTtl(src.as[Streams.CentEvent]).toDF()
     }
@@ -360,7 +354,7 @@ object StreamingOps {
     * per-invocation DynamoDB get (07_lambda_functions.py:18-71). */
   private[graft] def runFileFedDeliveryVerification(
       s: SparkSession, d: String): (org.apache.spark.sql.DataFrame, Seq[String]) = {
-    // NOTE (r15, measured): persisting this static side for the run
+    // NOTE (measured): persisting this static side for the run
     // (the stream-static join re-executes it per micro-batch) was
     // TRIED and reverted — the InMemoryRelation materialization
     // barrier in trigger 1 cost more than the saved re-aggregation at
@@ -540,7 +534,7 @@ object StreamingOps {
         |ORDER BY window_start_ms, key""".stripMargin) { (s, d) =>
       // fed from a REAL file source — two parquet drops moved into a
       // watched directory, one micro-batch each; never collects a row
-      // (r10: every st_* harness now runs on this feed)
+      // (every st_* harness runs on this feed)
       runFileFedWindowedCounts(s, d)._1
         .select(unix_millis(col("window_start")).as("window_start_ms"),
           unix_millis(col("window_end")).as("window_end_ms"),

@@ -173,9 +173,9 @@ object Lake {
     * gate measures the pruned scan, not the rewrite. */
   def optimizedLineitem(spark: SparkSession, sfDir: String): String = {
     // fold the source's mtime+size signature into the layout key so a
-    // regenerated corpus (CorpusGen rewrites lineitem when columns are
-    // missing) invalidates the cached rewrite instead of serving stale
-    // files that diverge from the oracle's fresh read
+    // regenerated corpus (`CorpusGen.write` overwrites lineitem)
+    // invalidates the cached rewrite instead of serving stale files
+    // that diverge from the oracle's fresh read
     val srcFile = new java.io.File(s"$sfDir/lineitem.parquet")
     val parts: Seq[java.io.File] =
       if (srcFile.isDirectory) Option(srcFile.listFiles()).map(_.toSeq).getOrElse(Seq(srcFile))

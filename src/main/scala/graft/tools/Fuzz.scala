@@ -2,16 +2,16 @@ package graft.tools
 
 import graft.CorpusGen
 
-/** Seed-randomized differential sweep (judge r11 Next #5): every
-  * hash-exact result to date is proven on ONE deterministic corpus
+/** Seed-randomized differential sweep: every hash-exact result of
+  * the gate fixtures is proven on ONE deterministic corpus
   * family — the same generator seed behind sf0.001/0.01/0.1 and their
   * Sf1Gen derivatives. A semantics bug that the fixed fixtures happen
   * to mask (tie-break order, empty-group edges, boundary dates, a
   * selectivity knife-edge) survives every one of those gates. This
-  * main generates N fresh corpora from N different [[graft.CorpusGen]]
-  * seeds (documents/embeddings/events + the relational slice — every
-  * table the §2.14 operators read) and dumps a representative entry
-  * subset per seed with the EXACT Verify machinery, so the driver-side
+  * main writes N fresh corpora with [[graft.CorpusGen.write]] from N
+  * different seeds (documents/embeddings/events + the relational slice
+  * — every table the §2.14 operators read) and dumps a representative
+  * entry subset per seed with the EXACT Verify machinery, so the driver-side
   * check.py can hash-compare Spark vs DuckDB on corpora none of the
   * fixtures ever saw.
   *
@@ -45,20 +45,14 @@ object Fuzz {
     spark.sparkContext.setLogLevel("WARN")
     try seeds.foreach { seed =>
       val dir = s"$workDir/corpus_s$seed"
-      // the 1x ScaleBench corpus shape, reseeded — CorpusGen draws are
-      // xxhash64(seed, salt, rowIdentity), so each seed is a genuinely
-      // different value stream over the same schema/cardinality recipe
-      CorpusGen.documents(spark, 5000L, seed)
-        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      CorpusGen.embeddings(spark, 2000L, seed = seed)
-        .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-      CorpusGen.events(spark, 100000L, seed)
-        .write.mode("overwrite").parquet(s"$dir/events.parquet")
-      CorpusGen.relational(spark, dir, 15000L, seed)
-      // the FleetLogix family, reseeded too (r12 verdict Next #1): the
-      // fl_ gates had exactly ONE seed (42) ever meet the oracle —
-      // boundary semantics (delay = 30 min, expiry = asOf + 30 d,
-      // midnight straddles, SCD2 tie days) need fresh value streams.
+      // CorpusGen draws are xxhash64(seed, salt, rowIdentity), so each
+      // seed is a genuinely different value stream over the same
+      // schema/cardinality recipe
+      CorpusGen.write(spark, dir, seed)
+      // the FleetLogix family, reseeded too: the fixture gives the fl_
+      // gates exactly ONE seed (42), and boundary semantics (delay =
+      // 30 min, expiry = asOf + 30 d, midnight straddles, SCD2 tie
+      // days) need fresh value streams.
       // Full reference volume (100k trips) so the fuzz drives the same
       // code paths as the gate; parquet lands under a per-seed dir the
       // re-derived oracle SQL points at.

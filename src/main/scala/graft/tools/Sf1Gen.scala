@@ -3,12 +3,13 @@ package graft.tools
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** sf1.0 stress-corpus generator (the r8 verdict's "one full-surface
-  * stress run at 10× the bench SF" input): the driver ships
-  * sf{0.001,0.01,0.1} read-only, so the 10× dir is DERIVED from sf0.1
-  * as ten key-shifted copies per scale-bearing table — every entity
-  * key is offset by copy·10^⌈log10(max+1)⌉ (a round decimal stride, so
-  * shifted keys never collide and provenance is visible in the digits),
+/** 10× stress-corpus generator, the input of the scale procedure
+  * (PERF.md, "One scale harness"): the driver ships sf{0.001,0.01,0.1}
+  * read-only, so a 10× dir is DERIVED from a source dir (sf0.1 gives
+  * sf1; chained on its own output, sf1 gives sf10) as ten key-shifted
+  * copies per scale-bearing table — every entity key is offset by
+  * copy·10^⌈log10(max+1)⌉ (a round decimal stride, so shifted keys
+  * never collide and provenance is visible in the digits),
   * with referential integrity preserved across tables (o_custkey moves
   * with c_custkey, lineitem's three FKs with their parents). The
   * nation/region dims pass through unchanged (they are genuinely

@@ -3,10 +3,10 @@ package graft.tools
 import graft.CorpusGen
 import graft.operators.StreamingOps
 
-/** Micro-batch SPLIT-AXIS fuzz (r13 verdict Next #3): the st_* gates
-  * replay fixed two-batch splits, but WHERE the split lands relative
-  * to a session gap / watermark advance is a semantic axis — the
-  * same-batch-dedup, cross-batch-state-drop, and late-drop code paths
+/** Micro-batch SPLIT-AXIS fuzz: the st_* gates replay fixed two-batch
+  * splits, but WHERE the split lands relative to a session gap /
+  * watermark advance is a semantic axis — the same-batch-dedup,
+  * cross-batch-state-drop, and late-drop code paths
   * are toggled by split placement, which data seeds alone never vary.
   * This main sweeps ≥3 split placements per split-fed st_* entry under
   * fresh corpus seeds, dumping each placement with the EXACT Verify
@@ -102,13 +102,9 @@ object SplitFuzz {
     spark.sparkContext.setLogLevel("WARN")
     seeds.foreach { seed =>
       val dir = s"$workDir/corpus_s$seed"
-      // the st_* surface reads events + documents + customer; same
-      // reseeded corpus recipe as tools.Fuzz
-      CorpusGen.documents(spark, 5000L, seed)
-        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      CorpusGen.events(spark, 100000L, seed)
-        .write.mode("overwrite").parquet(s"$dir/events.parquet")
-      CorpusGen.relational(spark, dir, 15000L, seed)
+      // the st_* surface reads events + documents + customer; the
+      // same reseeded corpus as tools.Fuzz
+      CorpusGen.write(spark, dir, seed)
       val placements =
         FracSpecs.map(_ -> FracEntries) ++ ParSpecs.map(_ -> ParEntries)
       placements.foreach { case (spec, entries) =>

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import scala.sys.process._
 
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, count, lit, sum, xxhash64}
 
 /** Contracts of the Verify dump loop itself — the machinery every
   * correctness claim rides on. */
@@ -72,5 +72,31 @@ class VerifySpec extends GraftSpec {
     val (mismatch, mismatchLog) = check(changed)
     assert(mismatch == 1, mismatchLog)
     assert(mismatchLog.linesIterator.exists(_.startsWith(s"  $name: FAIL")), mismatchLog)
+  }
+
+  test("CorpusGen.write: every table at 1x, the same rows for a seed, other rows for another") {
+    // row count plus an order-insensitive sum of row hashes per table
+    def digests(dir: String): Map[String, (Long, BigDecimal)] =
+      Tables.names.map { t =>
+        val df = spark.read.parquet(s"$dir/$t.parquet")
+        val r = df.agg(count(lit(1)),
+          sum(xxhash64(df.columns.map(col).toIndexedSeq: _*).cast("decimal(38,0)"))).head()
+        t -> ((r.getLong(0), BigDecimal(r.getDecimal(1))))
+      }.toMap
+    val dir = tempDir("corpus")
+    CorpusGen.write(spark, dir, 3L)
+    val first = digests(dir)
+    assert(Seq("documents", "embeddings", "events", "orders").map(first(_)._1) ===
+      Seq(5000L, 2000L, 100000L, 15000L))
+    assert(first.values.forall(_._1 > 0), first)
+    // a second write of the same seed overwrites with the same rows
+    CorpusGen.write(spark, dir, 3L)
+    assert(digests(dir) === first)
+    val other = tempDir("corpus-other")
+    CorpusGen.write(spark, other, 4L)
+    val second = digests(other)
+    // nation and region are fixed lists, not seeded draws
+    for (t <- Tables.names.filterNot(Set("nation", "region")))
+      assert(second(t)._2 != first(t)._2, s"$t: seed 4 drew the rows of seed 3")
   }
 }

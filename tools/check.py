@@ -11,16 +11,17 @@ threw). Each dumped entry with an oracle runs it in DuckDB over views of
 <sfDir>/<table>.parquet and compares schema (sorted column names), row count
 and a value hash over rows sorted by all columns (above DIGEST_ROWS dumped
 rows, a multiset digest computed inside DuckDB); a dumped entry without an
-oracle gets a rows>0 check. Every entry prints one line that starts with two
+oracle gets a rows>0 check. The oracle's top-level CTEs are staged as tables,
+one after the other, and dropped after its compare; DuckDB may use half the
+memory. Every entry prints one line that starts with two
 spaces; an oracle key with neither a dump nor a recorded failure (a
 restricted dump) prints a `-- name: not dumped` line and does not fail.
 Exits 1 if any entry failed, including every recorded Verify failure.
 
 With --timeout each entry runs in its own process, killed after SEC
-seconds, with its oracle's top-level CTEs staged as tables in a
-file-backed database under --tmp and DuckDB capped to half the memory and
-90% of the free disk there, so one quadratic oracle cannot stall,
-exhaust memory or fill the disk for the whole sweep.
+seconds, with its staged tables in a file-backed database under --tmp and
+DuckDB capped to 90% of the free disk there, so one quadratic oracle
+cannot stall, exhaust memory or fill the disk for the whole sweep.
 """
 import argparse, glob, hashlib, json, multiprocessing, os, re, shutil, sys
 import duckdb
@@ -42,20 +43,20 @@ DIGEST_ROWS = 5_000_000
 
 def connect(sf_dir, work=None):
     """A DuckDB connection with one view per table of <sfDir> (a single
-    parquet file or a Spark directory of part files). With `work` the
-    database is a file there, spills go beside it, and DuckDB may use half
-    the memory (the rest is for the row hash's Python rows) and 90% of the
-    disk that is free there."""
+    parquet file or a Spark directory of part files), where DuckDB may use
+    half the memory (the rest is for the row hash's Python rows). With
+    `work` the database is a file there, and spills go beside it, up to
+    90% of the disk that is free there."""
     if work is None:
         con = duckdb.connect()
     else:
         os.makedirs(work, exist_ok=True)
         con = duckdb.connect(os.path.join(work, "oracle.db"))
-        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
-        con.execute(f"SET memory_limit='{ram // 2 // 2**20}MB'")
         con.execute(f"SET temp_directory='{work}/spill'")
         free = shutil.disk_usage(work).free
         con.execute(f"SET max_temp_directory_size='{free * 9 // 10 // 2**20}MB'")
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    con.execute(f"SET memory_limit='{ram // 2 // 2**20}MB'")
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
         if os.path.isdir(p):
@@ -157,17 +158,19 @@ def split_ctes(sql):
     return staged, final
 
 
-def stage(con, sql):
+def stage(con, sql, staged):
     """Materialize each top-level CTE of the oracle as a table, one after
     the other, so DuckDB holds one stage's pipeline at a time instead of
     the whole CTE DAG; in a file-backed database each stage is
-    checkpointed to disk. Returns the statement left to run."""
+    checkpointed to disk. Appends each table's name to `staged` as it is
+    made and returns the statement left to run."""
     plan = split_ctes(sql)
     if plan is None:
         return sql
     ctes, final = plan
     for name, body in ctes:
         con.execute(f'CREATE OR REPLACE TABLE "{name}" AS {body}')
+        staged.append(name)
         con.execute("CHECKPOINT")
     return final
 
@@ -248,9 +251,11 @@ def digest_problems(con, sql, qdir):
     return [f"digest spark={s_h} duck={d_h}" + "".join(typed[:1])]
 
 
-def compare(con, out_dir, name, sql, staged=False):
+def compare(con, out_dir, name, sql):
     """Compare one dumped entry, print its line and return its kind:
-    'oracle' or 'rows' when it passed, 'fail' when it did not."""
+    'oracle' or 'rows' when it passed, 'fail' when it did not. The
+    oracle's staged tables are dropped afterwards, so they do not pile up
+    in a database shared by the entries."""
     qdir = f"{out_dir}/{name}"
     files = glob.glob(f"{qdir}/*.parquet")
     if not files:
@@ -261,12 +266,16 @@ def compare(con, out_dir, name, sql, staged=False):
         print(f"  {name}: rows-only {'OK' if n else 'EMPTY'} ({n} rows)")
         return "rows" if n else "fail"
     digest = n > DIGEST_ROWS
+    staged = []
     try:
         problems = (digest_problems if digest else rowhash_problems)(
-            con, stage(con, sql) if staged else sql, qdir)
+            con, stage(con, sql, staged), qdir)
     except Exception as e:
         print(f"  {name}: ORACLE SQL ERROR: {e}")
         return "fail"
+    finally:
+        for t in staged:
+            con.execute(f'DROP TABLE IF EXISTS "{t}"')
     if not problems:
         print(f"  {name}: OK ({n} rows{', digest' if digest else ''})")
         return "oracle"
@@ -277,7 +286,7 @@ def compare(con, out_dir, name, sql, staged=False):
 
 
 def _compare_isolated(send, sf_dir, out_dir, name, sql, work):
-    send.send(compare(connect(sf_dir, work), out_dir, name, sql, staged=True))
+    send.send(compare(connect(sf_dir, work), out_dir, name, sql))
 
 
 def isolated(sf_dir, out_dir, name, sql, timeout, tmp):
